@@ -55,18 +55,18 @@ def domain_percentiles(
     as a LONG column of that name, placed right after ``group_cols``.
 
     Precondition: ``value`` must be non-null on every input row (all
-    call sites guarantee it). NULLs are dropped before ranking (the
-    built-in ignores them too), but a group whose EVERY value is NULL
-    would vanish here where the built-in emits (group, NULL), and
-    ``keep_n`` counts only non-null rows — don't use this helper where
-    those cases can occur.
+    call sites guarantee it). The pre-aggregate enforces it: a NULL
+    value fails the query. Dropping NULLs instead would make a group
+    whose EVERY value is NULL vanish where the built-in emits
+    (group, NULL), and ``keep_n`` would count only non-null rows.
     """
     g = list(group_cols)
     vcol = F.col(value) if isinstance(value, str) else value
-    byval = (
-        df.filter(vcol.isNotNull())
-        .groupBy(*g, vcol.alias("_v"))
-        .agg(F.count(F.lit(1)).alias("_cnt"))
+    checked = F.coalesce(
+        vcol, F.raise_error(F.lit("domain_percentiles: NULL value"))
+    )
+    byval = df.groupBy(*g, checked.alias("_v")).agg(
+        F.count(F.lit(1)).alias("_cnt")
     )
     w_ord = (
         Window.partitionBy(*g)

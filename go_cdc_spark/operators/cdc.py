@@ -18,6 +18,8 @@ idempotency. Both operators are pure DataFrame plans:
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -77,6 +79,153 @@ def cdc_collapse(
     return latest.filter(F.col(op_col) != OP_DELETE)
 
 
+_DEC38 = "decimal(38,6)"
+
+
+class _Collapsed(NamedTuple):
+    changed: DataFrame  # the changed keys
+    added: DataFrame  # after-images of keys whose final op is not a delete
+    removed: DataFrame | None  # base rows of the changed keys
+
+
+def _collapse_changes(
+    changes: DataFrame,
+    keys: list[str],
+    pos_threshold: str | None,
+    pos_col: str,
+    op_col: str,
+    base: DataFrame | None = None,
+) -> _Collapsed:
+    """The front half every batch operator below shares: drop events at
+    or below the snapshot position (the reference's handoff rule),
+    collapse to the latest event per key, and look the changed keys'
+    before-images up from ``base`` by semi-join — the base is touched
+    only through the changed keys (broadcast/DPP-prunable; a change
+    batch is tiny next to the base)."""
+    if pos_threshold is not None:
+        changes = changes.filter(F.col(pos_col) > F.lit(pos_threshold))
+    # the collapsed batch feeds several consumers; the LAZY pin
+    # evaluates the events-scan + top-1 window ONCE per action instead
+    # of once per consumer (change batches are bounded, so the pin is
+    # batch-sized at any base-table scale)
+    latest = cdc_collapse(
+        changes, keys, pos_col=pos_col, op_col=op_col, keep_deletes=True
+    ).localCheckpoint(eager=False)
+    changed = latest.select(*keys)
+    removed = None if base is None else base.join(changed, on=keys, how="left_semi")
+    return _Collapsed(changed, latest.filter(F.col(op_col) != OP_DELETE), removed)
+
+
+def _reject_clash(fn: str, group_cols: list[str], reserved: set[str]) -> None:
+    clash = reserved & set(group_cols)
+    if clash:
+        raise ValueError(
+            f"group_cols {sorted(clash)} collide with {fn}'s "
+            f"result columns; rename the grouping column(s)"
+        )
+
+
+def _merge_delta(
+    base: DataFrame, delta: DataFrame, cells: list[str], measures: dict[str, str]
+) -> DataFrame:
+    """Fold a signed delta into a stored aggregate: full-outer join on
+    the cell columns, each measure ``m`` plus the delta's ``d<m>`` at
+    type ``measures[m]``. Cells whose row count ``n`` is no longer
+    positive drop (SQL GROUP BY existence)."""
+    zero = {t: F.lit(0).cast(t) for t in measures.values()}
+    return (
+        base.join(delta, on=cells, how="full_outer")
+        .select(
+            *cells,
+            *[
+                (
+                    F.coalesce(F.col(m).cast(t), zero[t])
+                    + F.coalesce(F.col(f"d{m}"), zero[t])
+                )
+                .cast(t)
+                .alias(m)
+                for m, t in measures.items()
+            ],
+        )
+        .filter(F.col("n") > 0)
+    )
+
+
+def _fold_sums(
+    removed: DataFrame,
+    added: DataFrame,
+    group_cols: list[str],
+    sum_cols: list[str],
+    base_agg: DataFrame | None,
+    base: DataFrame,
+) -> DataFrame:
+    """COUNT(*) + exact-decimal SUMs per group: retract ``removed``,
+    assert ``added`` (one union, one shuffle) and fold into
+    ``base_agg`` — recomputed from ``base`` when no stored MV is given.
+    Returns ``group_cols + [n (long), sum_<col> (decimal)]``."""
+    from .relational import DEC
+
+    def grouped(df: DataFrame, sign: int) -> DataFrame:
+        aggs = [(F.count(F.lit(1)) * sign).cast("long").alias("n")] + [
+            (F.sum(F.col(c).cast(DEC)) * sign).cast(_DEC38).alias(f"sum_{c}")
+            for c in sum_cols
+        ]
+        return df.groupBy(*group_cols).agg(*aggs)
+
+    if base_agg is None:
+        base_agg = grouped(base, 1)
+    delta = (
+        grouped(removed, -1)
+        .unionByName(grouped(added, 1))
+        .groupBy(*group_cols)
+        .agg(
+            F.sum("n").cast("long").alias("dn"),
+            *[F.sum(f"sum_{c}").cast(_DEC38).alias(f"dsum_{c}") for c in sum_cols],
+        )
+    )
+    return _merge_delta(
+        base_agg,
+        delta,
+        group_cols,
+        {"n": "long", **{f"sum_{c}": _DEC38 for c in sum_cols}},
+    )
+
+
+def _fold_counts(
+    snapshot: DataFrame,
+    d: _Collapsed,
+    group_cols: list[str],
+    val_col: str,
+    cell: Column,
+    name: str,
+    base: DataFrame | None,
+) -> DataFrame:
+    """The count-cell fold behind the histogram and the mode: per
+    (group, cell) the signed count of non-NULL values — ``cell`` is a
+    static bin of the value or the value itself, so a row's cell never
+    depends on other rows and retraction is an exact signed delta.
+    Returns ``group_cols + [name, n]`` with ``n > 0``."""
+    cell = cell.alias(name)
+    nn = F.col(val_col).isNotNull()
+
+    def signed(df: DataFrame, sign: int) -> DataFrame:
+        return df.filter(nn).select(*group_cols, cell, F.lit(sign).alias("__sign"))
+
+    delta = (
+        signed(d.removed, -1)
+        .unionByName(signed(d.added, 1))
+        .groupBy(*group_cols, name)
+        .agg(F.sum("__sign").cast("long").alias("dn"))
+    )
+    if base is None:
+        base = (
+            snapshot.filter(nn)
+            .groupBy(*group_cols, cell)
+            .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        )
+    return _merge_delta(base, delta, [*group_cols, name], {"n": "long"})
+
+
 def apply_changes(
     snapshot: DataFrame,
     changes: DataFrame,
@@ -93,20 +242,11 @@ def apply_changes(
     discarded (the reference's handoff rule; duplicate redelivery is
     likewise idempotent because the filter + latest-wins collapse are).
     """
-    if pos_threshold is not None:
-        changes = changes.filter(F.col(pos_col) > F.lit(pos_threshold))
-    # r14: the collapsed batch feeds every consumer below; the LAZY
-    # pin evaluates the events-scan + top-1 window ONCE per action
-    # instead of once per consumer (change batches are bounded, so the
-    # pin is batch-sized at any base-table scale).
-    latest = cdc_collapse(
-        changes, keys, pos_col=pos_col, op_col=op_col, keep_deletes=True
-    ).localCheckpoint(eager=False)
+    d = _collapse_changes(changes, keys, pos_threshold, pos_col, op_col)
     # Broadcast-able at typical change-batch sizes; AQE downgrades to
     # shuffled anti-join automatically when the change set is large.
-    unchanged = snapshot.join(latest.select(*keys), on=keys, how="left_anti")
-    upserts = latest.filter(F.col(op_col) != OP_DELETE).select(*snapshot.columns)
-    return unchanged.unionByName(upserts)
+    unchanged = snapshot.join(d.changed, on=keys, how="left_anti")
+    return unchanged.unionByName(d.added.select(*snapshot.columns))
 
 
 def materialize_changelog(
@@ -269,11 +409,13 @@ def incremental_agg(
     accumulate in exact decimal, so delta-maintenance is bit-identical
     to full recomputation at any parallelism.
 
-    Twin of ``streaming/ivm.py``'s :class:`IncrementalAggregate`, which
-    folds per-event ``+data − before`` deltas and therefore needs full
-    before-images (``binlog_row_image=FULL``). This batch form covers
-    the minimal-image case: the before-image is LOOKED UP from the base
-    table instead, touching only the changed keys.
+    The signed fold (:func:`_fold_sums`) is the algebra
+    ``streaming/ivm.py``'s :class:`IncrementalAggregate` also runs
+    (through ``_SignedFold``); the two differ only in where the
+    before-image comes from. The stream takes it from the event
+    (``binlog_row_image=FULL``); this batch form covers the
+    minimal-image case and LOOKS IT UP from the base table, touching
+    only the changed keys.
 
     Scale shape: the base table is touched only by a semi-join on the
     changed keys (broadcast/DPP-prunable — a change batch is tiny next
@@ -285,56 +427,15 @@ def incremental_agg(
 
     Returns ``group_cols + [n (long), sum_<col> (decimal)]``.
     """
-    from .relational import DEC
-
-    reserved = {"n", "dn"} | {f"sum_{c}" for c in sum_cols} | {
-        f"dsum_{c}" for c in sum_cols
-    }
-    clash = reserved & set(group_cols)
-    if clash:
-        raise ValueError(
-            f"group_cols {sorted(clash)} collide with incremental_agg's "
-            f"result columns; rename the grouping column(s)"
-        )
-    dec38 = "decimal(38,6)"
-    if pos_threshold is not None:
-        changes = changes.filter(F.col(pos_col) > F.lit(pos_threshold))
-    latest = cdc_collapse(
-        changes, keys, pos_col=pos_col, op_col=op_col, keep_deletes=True
-    ).localCheckpoint(eager=False)  # r14: batch-sized, multi-consumer pin
-
-    def grouped(df: DataFrame, sign: int) -> DataFrame:
-        aggs = [(F.count(F.lit(1)) * sign).cast("long").alias("n")] + [
-            (F.sum(F.col(c).cast(DEC)) * sign).cast(dec38).alias(f"sum_{c}")
-            for c in sum_cols
-        ]
-        return df.groupBy(*group_cols).agg(*aggs)
-
-    if base_agg is None:
-        base_agg = grouped(snapshot, 1)
+    _reject_clash(
+        "incremental_agg",
+        group_cols,
+        {"n", "dn"} | {f"{p}sum_{c}" for c in sum_cols for p in ("", "d")},
+    )
+    d = _collapse_changes(changes, keys, pos_threshold, pos_col, op_col, snapshot)
     # Retract the before-image of every changed key (delete OR upsert);
-    # assert the after-image of the survivors. One union, one shuffle.
-    removed = snapshot.join(latest.select(*keys), on=keys, how="left_semi")
-    added = latest.filter(F.col(op_col) != OP_DELETE)
-    delta = grouped(removed, -1).unionByName(grouped(added, 1))
-    delta = delta.groupBy(*group_cols).agg(
-        F.sum("n").cast("long").alias("dn"),
-        *[F.sum(f"sum_{c}").cast(dec38).alias(f"dsum_{c}") for c in sum_cols],
-    )
-    merged = base_agg.join(delta, on=group_cols, how="full_outer").select(
-        *group_cols,
-        (F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("dn"), F.lit(0)))
-        .cast("long")
-        .alias("n"),
-        *[
-            (
-                F.coalesce(F.col(f"sum_{c}").cast(dec38), F.lit(0).cast(dec38))
-                + F.coalesce(F.col(f"dsum_{c}"), F.lit(0).cast(dec38))
-            ).alias(f"sum_{c}")
-            for c in sum_cols
-        ],
-    )
-    return merged.filter(F.col("n") > 0)
+    # assert the after-image of the survivors.
+    return _fold_sums(d.removed, d.added, group_cols, sum_cols, base_agg, snapshot)
 
 
 def incremental_minmax(
@@ -375,34 +476,24 @@ def incremental_minmax(
 
     Returns ``group_cols + [min_val, max_val]`` for non-empty groups.
     """
-    clash = {"min_val", "max_val", "r_min", "r_max", "i_min", "i_max"} & set(
-        group_cols
+    _reject_clash(
+        "incremental_minmax",
+        group_cols,
+        {"min_val", "max_val", "r_min", "r_max", "i_min", "i_max"},
     )
-    if clash:
-        raise ValueError(
-            f"group_cols {sorted(clash)} collide with incremental_minmax's "
-            f"result columns; rename the grouping column(s)"
-        )
-    if pos_threshold is not None:
-        changes = changes.filter(F.col(pos_col) > F.lit(pos_threshold))
-    latest = cdc_collapse(
-        changes, keys, pos_col=pos_col, op_col=op_col, keep_deletes=True
-    ).localCheckpoint(eager=False)  # r14: batch-sized, multi-consumer pin
+    d = _collapse_changes(changes, keys, pos_threshold, pos_col, op_col, snapshot)
     if base_minmax is None:
         base_minmax = snapshot.groupBy(*group_cols).agg(
             F.min(val_col).alias("min_val"),
             F.max(val_col).alias("max_val"),
             F.count(F.lit(1)).alias("n"),
         )
-    changed_keys = latest.select(*keys)
-    removed = snapshot.join(changed_keys, on=keys, how="left_semi")
-    rem = removed.groupBy(*group_cols).agg(
+    rem = d.removed.groupBy(*group_cols).agg(
         F.min(val_col).alias("r_min"),
         F.max(val_col).alias("r_max"),
         F.count(F.lit(1)).alias("r_n"),
     )
-    added = latest.filter(F.col(op_col) != OP_DELETE)
-    ins = added.groupBy(*group_cols).agg(
+    ins = d.added.groupBy(*group_cols).agg(
         F.min(val_col).alias("i_min"),
         F.max(val_col).alias("i_max"),
         F.count(F.lit(1)).alias("i_n"),
@@ -435,9 +526,9 @@ def incremental_minmax(
     )
     dirty_groups = st.filter(dirty).select(*group_cols)
     pool = (
-        snapshot.join(changed_keys, on=keys, how="left_anti")
+        snapshot.join(d.changed, on=keys, how="left_anti")
         .select(*group_cols, val_col)
-        .unionByName(added.select(*group_cols, val_col))
+        .unionByName(d.added.select(*group_cols, val_col))
     )
     repaired = (
         pool.join(dirty_groups, on=group_cols, how="left_semi")
@@ -445,6 +536,57 @@ def incremental_minmax(
         .agg(F.min(val_col).alias("min_val"), F.max(val_col).alias("max_val"))
     )
     return clean.unionByName(repaired)
+
+
+class _JoinDelta(NamedTuple):
+    fact: _Collapsed
+    changed_d: DataFrame  # changed dim keys, under the fact's fk names
+    fact_after: DataFrame  # after-images of changed facts
+    dim_new: DataFrame  # after-images of changed dims (fk names)
+    dim_r: DataFrame  # pre-change dim (fk names)
+    dim_merged: DataFrame  # post-change dim (fk names)
+    fact_keep: DataFrame  # pre-change facts whose key did not change
+    view_cols: list[str]
+
+
+def _join_delta(
+    fact: DataFrame,
+    fact_changes: DataFrame,
+    fact_keys: list[str],
+    dim: DataFrame,
+    dim_changes: DataFrame,
+    dim_keys: list[str],
+    fk: list[str],
+    pos_threshold: str | None,
+    pos_col: str,
+    op_col: str,
+) -> _JoinDelta:
+    """Front half shared by the two join operators: both sides
+    collapsed, and the dim-side join columns renamed to the fact's FK
+    names once, so every join is a same-name equi-join (single key
+    column out)."""
+    f = _collapse_changes(fact_changes, fact_keys, pos_threshold, pos_col, op_col, fact)
+    d = _collapse_changes(dim_changes, dim_keys, pos_threshold, pos_col, op_col)
+
+    def as_fk(df: DataFrame) -> DataFrame:
+        for d_, f_ in zip(dim_keys, fk):
+            if d_ != f_:
+                df = df.withColumnRenamed(d_, f_)
+        return df
+
+    changed_d = as_fk(d.changed)
+    dim_new = as_fk(d.added.select(*dim.columns))
+    dim_r = as_fk(dim)
+    return _JoinDelta(
+        fact=f,
+        changed_d=changed_d,
+        fact_after=f.added.select(*fact.columns),
+        dim_new=dim_new,
+        dim_r=dim_r,
+        dim_merged=dim_r.join(changed_d, on=fk, how="left_anti").unionByName(dim_new),
+        fact_keep=fact.join(f.changed, on=fact_keys, how="left_anti"),
+        view_cols=fact.columns + [c for c in dim.columns if c not in dim_keys],
+    )
 
 
 def incremental_join(
@@ -488,53 +630,28 @@ def incremental_join(
     Returns ``fact.columns + dim non-key columns``.
     """
     fk = fk or dim_keys
-    if pos_threshold is not None:
-        fact_changes = fact_changes.filter(F.col(pos_col) > F.lit(pos_threshold))
-        dim_changes = dim_changes.filter(F.col(pos_col) > F.lit(pos_threshold))
-    d_fact = cdc_collapse(
-        fact_changes, fact_keys, pos_col=pos_col, op_col=op_col, keep_deletes=True
-    ).localCheckpoint(eager=False)  # r14: batch-sized, multi-consumer pin
-    d_dim = cdc_collapse(
-        dim_changes, dim_keys, pos_col=pos_col, op_col=op_col, keep_deletes=True
-    ).localCheckpoint(eager=False)
-
-    # Rename the dim-side join columns to the fact's FK names once, so
-    # every join below is a same-name equi-join (single key column out).
-    def _as_fk(df: DataFrame) -> DataFrame:
-        renamed = df
-        for d, f_ in zip(dim_keys, fk):
-            if d != f_:
-                renamed = renamed.withColumnRenamed(d, f_)
-        return renamed
-    dim_nonkey = [c for c in dim.columns if c not in dim_keys]
-    out_cols = fact.columns + dim_nonkey
-
-    changed_f = d_fact.select(*fact_keys)
-    changed_d = _as_fk(d_dim.select(*dim_keys))
-    fact_after = d_fact.filter(F.col(op_col) != OP_DELETE).select(*fact.columns)
-    dim_touched_new = _as_fk(d_dim.filter(F.col(op_col) != OP_DELETE).select(*dim.columns))
-    dim_r = _as_fk(dim)
-
-    fact_keep = fact.join(changed_f, on=fact_keys, how="left_anti")
+    j = _join_delta(
+        fact, fact_changes, fact_keys, dim, dim_changes, dim_keys, fk,
+        pos_threshold, pos_col, op_col,
+    )
     if base_view is None:
         survivors = (
-            fact_keep.join(changed_d, on=fk, how="left_anti")
-            .join(dim_r.join(changed_d, on=fk, how="left_anti"), on=fk)
-            .select(*out_cols)
+            j.fact_keep.join(j.changed_d, on=fk, how="left_anti")
+            .join(j.dim_r.join(j.changed_d, on=fk, how="left_anti"), on=fk)
+            .select(*j.view_cols)
         )
     else:
         survivors = (
-            base_view.join(changed_f, on=fact_keys, how="left_anti")
-            .join(changed_d, on=fk, how="left_anti")
-            .select(*out_cols)
+            base_view.join(j.fact.changed, on=fact_keys, how="left_anti")
+            .join(j.changed_d, on=fk, how="left_anti")
+            .select(*j.view_cols)
         )
     dim_fanout = (
-        fact_keep.join(changed_d, on=fk, how="left_semi")
-        .join(dim_touched_new, on=fk)
-        .select(*out_cols)
+        j.fact_keep.join(j.changed_d, on=fk, how="left_semi")
+        .join(j.dim_new, on=fk)
+        .select(*j.view_cols)
     )
-    dim_merged = dim_r.join(changed_d, on=fk, how="left_anti").unionByName(dim_touched_new)
-    fact_changed = fact_after.join(dim_merged, on=fk).select(*out_cols)
+    fact_changed = j.fact_after.join(j.dim_merged, on=fk).select(*j.view_cols)
     return survivors.unionByName(dim_fanout).unionByName(fact_changed)
 
 
@@ -585,113 +702,51 @@ def incremental_join_agg(
 
     Returns ``group_cols + [n (long), sum_<col> (decimal)]``.
     """
-    from .relational import DEC
-
-    reserved = {"n", "dn"} | {f"sum_{c}" for c in sum_cols} | {
-        f"dsum_{c}" for c in sum_cols
-    }
-    clash = reserved & set(group_cols)
-    if clash:
-        raise ValueError(
-            f"group_cols {sorted(clash)} collide with incremental_join_agg's "
-            f"result columns; rename the grouping column(s)"
-        )
-    dec38 = "decimal(38,6)"
-    fk = fk or dim_keys
-    if pos_threshold is not None:
-        fact_changes = fact_changes.filter(F.col(pos_col) > F.lit(pos_threshold))
-        dim_changes = dim_changes.filter(F.col(pos_col) > F.lit(pos_threshold))
-    d_fact = cdc_collapse(
-        fact_changes, fact_keys, pos_col=pos_col, op_col=op_col, keep_deletes=True
-    ).localCheckpoint(eager=False)  # r14: batch-sized, multi-consumer pin
-    d_dim = cdc_collapse(
-        dim_changes, dim_keys, pos_col=pos_col, op_col=op_col, keep_deletes=True
-    ).localCheckpoint(eager=False)
-
-    def _as_fk(df: DataFrame) -> DataFrame:
-        renamed = df
-        for d, f_ in zip(dim_keys, fk):
-            if d != f_:
-                renamed = renamed.withColumnRenamed(d, f_)
-        return renamed
-
-    dim_nonkey = [c for c in dim.columns if c not in dim_keys]
-    view_cols = fact.columns + dim_nonkey
-    changed_f = d_fact.select(*fact_keys)
-    changed_d = _as_fk(d_dim.select(*dim_keys))
-    fact_after = d_fact.filter(F.col(op_col) != OP_DELETE).select(*fact.columns)
-    dim_touched_new = _as_fk(
-        d_dim.filter(F.col(op_col) != OP_DELETE).select(*dim.columns)
+    _reject_clash(
+        "incremental_join_agg",
+        group_cols,
+        {"n", "dn"} | {f"{p}sum_{c}" for c in sum_cols for p in ("", "d")},
     )
-    dim_r = _as_fk(dim)
-    fact_keep = fact.join(changed_f, on=fact_keys, how="left_anti")
-
+    fk = fk or dim_keys
+    j = _join_delta(
+        fact, fact_changes, fact_keys, dim, dim_changes, dim_keys, fk,
+        pos_threshold, pos_col, op_col,
+    )
+    cols = j.view_cols
     # retractions: old rows of (changed facts) ∪ (untouched facts with
     # a changed dim) — disjoint by construction
     if base_view is None:
-        old_fact_part = fact.join(changed_f, on=fact_keys, how="left_semi").join(
-            dim_r, on=fk
-        )
-        old_dim_part = fact_keep.join(changed_d, on=fk, how="left_semi").join(
-            dim_r, on=fk
-        )
-        removed = old_fact_part.select(*view_cols).unionByName(
-            old_dim_part.select(*view_cols)
+        removed = (
+            j.fact.removed.join(j.dim_r, on=fk)
+            .select(*cols)
+            .unionByName(
+                j.fact_keep.join(j.changed_d, on=fk, how="left_semi")
+                .join(j.dim_r, on=fk)
+                .select(*cols)
+            )
         )
     else:
         removed = (
-            base_view.join(changed_f, on=fact_keys, how="left_semi")
-            .select(*view_cols)
+            base_view.join(j.fact.changed, on=fact_keys, how="left_semi")
+            .select(*cols)
             .unionByName(
-                base_view.join(changed_f, on=fact_keys, how="left_anti")
-                .join(changed_d, on=fk, how="left_semi")
-                .select(*view_cols)
+                base_view.join(j.fact.changed, on=fact_keys, how="left_anti")
+                .join(j.changed_d, on=fk, how="left_semi")
+                .select(*cols)
             )
         )
-
     # assertions: the same two parts, post-change images
-    dim_merged = dim_r.join(changed_d, on=fk, how="left_anti").unionByName(
-        dim_touched_new
-    )
     added = (
-        fact_after.join(dim_merged, on=fk)
-        .select(*view_cols)
+        j.fact_after.join(j.dim_merged, on=fk)
+        .select(*cols)
         .unionByName(
-            fact_keep.join(changed_d, on=fk, how="left_semi")
-            .join(dim_touched_new, on=fk)
-            .select(*view_cols)
+            j.fact_keep.join(j.changed_d, on=fk, how="left_semi")
+            .join(j.dim_new, on=fk)
+            .select(*cols)
         )
     )
-
-    def grouped(df: DataFrame, sign: int) -> DataFrame:
-        aggs = [(F.count(F.lit(1)) * sign).cast("long").alias("n")] + [
-            (F.sum(F.col(c).cast(DEC)) * sign).cast(dec38).alias(f"sum_{c}")
-            for c in sum_cols
-        ]
-        return df.groupBy(*group_cols).agg(*aggs)
-
-    if base_agg is None:
-        base = base_view if base_view is not None else fact.join(dim_r, on=fk)
-        base_agg = grouped(base, 1)
-    delta = grouped(removed, -1).unionByName(grouped(added, 1))
-    delta = delta.groupBy(*group_cols).agg(
-        F.sum("n").cast("long").alias("dn"),
-        *[F.sum(f"sum_{c}").cast(dec38).alias(f"dsum_{c}") for c in sum_cols],
-    )
-    merged = base_agg.join(delta, on=group_cols, how="full_outer").select(
-        *group_cols,
-        (F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("dn"), F.lit(0)))
-        .cast("long")
-        .alias("n"),
-        *[
-            (
-                F.coalesce(F.col(f"sum_{c}").cast(dec38), F.lit(0).cast(dec38))
-                + F.coalesce(F.col(f"dsum_{c}"), F.lit(0).cast(dec38))
-            ).alias(f"sum_{c}")
-            for c in sum_cols
-        ],
-    )
-    return merged.filter(F.col("n") > 0)
+    base = base_view if base_view is not None else fact.join(j.dim_r, on=fk)
+    return _fold_sums(removed, added, group_cols, sum_cols, base_agg, base)
 
 
 def incremental_distinct(
@@ -727,20 +782,13 @@ def incremental_distinct(
 
     Returns ``group_cols + [n_distinct (long), n (long)]``.
     """
-    clash = {"n_distinct", "n", "dn", "dd", "r_n", "i_n", "s_n"} & set(group_cols)
-    if clash:
-        raise ValueError(
-            f"group_cols {sorted(clash)} collide with incremental_distinct's "
-            f"result columns; rename the grouping column(s)"
-        )
-    if pos_threshold is not None:
-        changes = changes.filter(F.col(pos_col) > F.lit(pos_threshold))
-    latest = cdc_collapse(
-        changes, keys, pos_col=pos_col, op_col=op_col, keep_deletes=True
-    ).localCheckpoint(eager=False)  # r14: batch-sized, multi-consumer pin
-    changed_keys = latest.select(*keys)
-    removed = snapshot.join(changed_keys, on=keys, how="left_semi")
-    added = latest.filter(F.col(op_col) != OP_DELETE)
+    _reject_clash(
+        "incremental_distinct",
+        group_cols,
+        {"n_distinct", "n", "dn", "dn_distinct", "r_n", "i_n", "s_n"},
+    )
+    d = _collapse_changes(changes, keys, pos_threshold, pos_col, op_col, snapshot)
+    removed, added = d.removed, d.added
     pair = group_cols + [val_col]
 
     # Row-count deltas (NULL values included: existence is row-based).
@@ -776,7 +824,7 @@ def incremental_distinct(
     ddist = support.groupBy(*group_cols).agg(
         F.sum(
             (F.col("new_n") > 0).cast("long") - (F.col("s_n") > 0).cast("long")
-        ).alias("dd")
+        ).alias("dn_distinct")
     )
 
     if base_distinct is None:
@@ -784,21 +832,12 @@ def incremental_distinct(
             F.count_distinct(F.col(val_col)).alias("n_distinct"),
             F.count(F.lit(1)).alias("n"),
         )
-    merged = (
-        base_distinct.join(ddist, on=group_cols, how="full_outer")
-        .join(dn, on=group_cols, how="full_outer")
-        .select(
-            *group_cols,
-            (
-                F.coalesce(F.col("n_distinct"), F.lit(0))
-                + F.coalesce(F.col("dd"), F.lit(0))
-            ).cast("long").alias("n_distinct"),
-            (
-                F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("dn"), F.lit(0))
-            ).cast("long").alias("n"),
-        )
+    return _merge_delta(
+        base_distinct,
+        ddist.join(dn, on=group_cols, how="full_outer"),
+        group_cols,
+        {"n_distinct": "long", "n": "long"},
     )
-    return merged.filter(F.col("n") > 0)
 
 
 _CDC_IVM_ORACLE = f"""
@@ -1147,17 +1186,10 @@ def incremental_topk(
 
     Returns ``group_cols + keys + [val_col, rank]``.
     """
-    if pos_threshold is not None:
-        changes = changes.filter(F.col(pos_col) > F.lit(pos_threshold))
-    latest = cdc_collapse(
-        changes, keys, pos_col=pos_col, op_col=op_col, keep_deletes=True
-    ).localCheckpoint(eager=False)  # r14: batch-sized, multi-consumer pin
-    changed_keys = latest.select(*keys)
-    after = latest.filter(F.col(op_col) != OP_DELETE)
+    d = _collapse_changes(changes, keys, pos_threshold, pos_col, op_col, snapshot)
     touched = (
-        snapshot.join(changed_keys, on=keys, how="left_semi")
-        .select(*group_cols)
-        .unionByName(after.select(*group_cols))
+        d.removed.select(*group_cols)
+        .unionByName(d.added.select(*group_cols))
         .distinct()
     )
     row_cols = group_cols + keys + [val_col]
@@ -1165,9 +1197,9 @@ def incremental_topk(
         base_topk = _topk_rows(snapshot, group_cols, keys, val_col, k)
     survivors = base_topk.join(touched, on=group_cols, how="left_anti")
     pool = (
-        snapshot.join(changed_keys, on=keys, how="left_anti")
+        snapshot.join(d.changed, on=keys, how="left_anti")
         .select(*row_cols)
-        .unionByName(after.select(*row_cols))
+        .unionByName(d.added.select(*row_cols))
         .join(F.broadcast(touched), on=group_cols, how="left_semi")
     )
     repaired = _topk_rows(pool, group_cols, keys, val_col, k)
@@ -1218,42 +1250,11 @@ def incremental_histogram(
     Per-batch cost: O(changes + touched (group, bin) cells). Returns
     ``group_cols + [bin, n]`` with ``n > 0``.
     """
-    if pos_threshold is not None:
-        changes = changes.filter(F.col(pos_col) > F.lit(pos_threshold))
-    latest = cdc_collapse(
-        changes, keys, pos_col=pos_col, op_col=op_col, keep_deletes=True
-    ).localCheckpoint(eager=False)  # r14: batch-sized, multi-consumer pin
-    changed_keys = latest.select(*keys)
-    bcol = _bin_expr(val_col, lo, hi, nbins)
-    removed = (
-        snapshot.join(changed_keys, on=keys, how="left_semi")
-        .filter(F.col(val_col).isNotNull())
-        .select(*group_cols, bcol.alias("bin"), F.lit(-1).alias("__sign"))
+    d = _collapse_changes(changes, keys, pos_threshold, pos_col, op_col, snapshot)
+    return _fold_counts(
+        snapshot, d, group_cols, val_col, _bin_expr(val_col, lo, hi, nbins), "bin",
+        base_hist,
     )
-    added = (
-        latest.filter(F.col(op_col) != OP_DELETE)
-        .filter(F.col(val_col).isNotNull())
-        .select(*group_cols, bcol.alias("bin"), F.lit(1).alias("__sign"))
-    )
-    delta = (
-        removed.unionByName(added)
-        .groupBy(*group_cols, "bin")
-        .agg(F.sum("__sign").cast("long").alias("dn"))
-    )
-    if base_hist is None:
-        base_hist = (
-            snapshot.filter(F.col(val_col).isNotNull())
-            .groupBy(*group_cols, bcol.alias("bin"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        )
-    merged = base_hist.join(delta, on=[*group_cols, "bin"], how="full_outer").select(
-        *group_cols,
-        "bin",
-        (
-            F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("dn"), F.lit(0))
-        ).cast("long").alias("n"),
-    )
-    return merged.filter(F.col("n") > 0)
 
 
 def histogram_percentiles(
@@ -1361,43 +1362,10 @@ def incremental_mode(
     Per-batch cost: O(changes + touched (group, value) cells). Returns
     ``group_cols + [val_col, n]`` with ``n > 0``.
     """
-    if pos_threshold is not None:
-        changes = changes.filter(F.col(pos_col) > F.lit(pos_threshold))
-    latest = cdc_collapse(
-        changes, keys, pos_col=pos_col, op_col=op_col, keep_deletes=True
-    ).localCheckpoint(eager=False)  # r14: batch-sized, multi-consumer pin
-    changed_keys = latest.select(*keys)
-    removed = (
-        snapshot.join(changed_keys, on=keys, how="left_semi")
-        .filter(F.col(val_col).isNotNull())
-        .select(*group_cols, val_col, F.lit(-1).alias("__sign"))
+    d = _collapse_changes(changes, keys, pos_threshold, pos_col, op_col, snapshot)
+    return _fold_counts(
+        snapshot, d, group_cols, val_col, F.col(val_col), val_col, base_counts
     )
-    added = (
-        latest.filter(F.col(op_col) != OP_DELETE)
-        .filter(F.col(val_col).isNotNull())
-        .select(*group_cols, val_col, F.lit(1).alias("__sign"))
-    )
-    delta = (
-        removed.unionByName(added)
-        .groupBy(*group_cols, val_col)
-        .agg(F.sum("__sign").cast("long").alias("dn"))
-    )
-    if base_counts is None:
-        base_counts = (
-            snapshot.filter(F.col(val_col).isNotNull())
-            .groupBy(*group_cols, val_col)
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        )
-    merged = base_counts.join(
-        delta, on=[*group_cols, val_col], how="full_outer"
-    ).select(
-        *group_cols,
-        val_col,
-        (
-            F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("dn"), F.lit(0))
-        ).cast("long").alias("n"),
-    )
-    return merged.filter(F.col("n") > 0)
 
 
 def mode_read(counts: DataFrame, group_cols: list[str], val_col: str) -> DataFrame:

@@ -304,7 +304,16 @@ def embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             x, lambda xf: F.struct(xf.alias("xf"), ray_fold(mm, xf).alias("lam"))
         )
 
-    row = mrow.select(_let(F.col("m"), final_struct).alias("r"))
+    # the fold indexes entries positionally: a missing or duplicated
+    # (i, j) entry would silently shift every later coordinate
+    m = F.col("m")
+    m_checked = F.coalesce(
+        F.assert_true(
+            F.size(m) == F.lit(_DIM * _DIM), "covariance matrix is not DIM*DIM"
+        ),
+        m,
+    )
+    row = mrow.select(_let(m_checked, final_struct).alias("r"))
     return (
         row.select(F.posexplode(F.col("r.xf")).alias("i0", "component"), "r.lam")
         .select(

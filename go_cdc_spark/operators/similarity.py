@@ -696,7 +696,8 @@ _IVF_NPROBE = 2
 # consumers filter rn <= _IVF_NPROBE against that. Raising the knob
 # past 2 would silently TRUNCATE probes to 2 — fail loudly instead
 # (widen argtop2_cosine to an argtop-k fold before raising it).
-assert _IVF_NPROBE <= 2, "_coarse_assign's argtop2 fold caps nprobe at 2"
+if _IVF_NPROBE > 2:
+    raise ValueError("_coarse_assign's argtop2 fold caps nprobe at 2")
 
 _IVF_NPROBE2_ORACLE = f"""
 WITH cent AS (SELECT vec_id AS centroid_id, embedding AS cent_emb FROM embeddings

@@ -14,10 +14,10 @@ nor a stall: quarantine the evidence, count it, keep going.
 
 Replay contract: the quarantine writes one deterministic directory per
 micro-batch (overwrite mode), so a crash-replayed batch rewrites the
-identical quarantine content — idempotent without a stamp, the
-DedupIngest pattern. The CLEAN rows keep flowing to the wrapped
-consumer, whose own replay guard (storeio stamp or idempotent merge)
-is unchanged.
+identical quarantine content — idempotent without a stamp, because
+the directory is named by the batch id alone. The CLEAN rows keep
+flowing to the wrapped consumer, whose own replay guard (storeio
+stamp or idempotent merge) is unchanged.
 """
 
 from __future__ import annotations

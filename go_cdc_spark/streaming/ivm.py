@@ -40,8 +40,10 @@ from __future__ import annotations
 import os
 import uuid as uuidlib
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from .. import storeio
 from ..sources.changelog import OP_DELETE, decode_image_value
@@ -50,16 +52,6 @@ OP_INSERT = "insert"
 OP_UPDATE = "update"
 
 _SUM_T = "decimal(38,6)"
-
-# Replay guard. Deltas are NOT idempotent (folding a batch twice adds
-# twice), and Structured Streaming's contract is exactly this failure
-# mode: a crash BETWEEN the foreachBatch write and the checkpoint
-# commit REPLAYS the batch on restart. The MERGE materializer survives
-# replay because latest-wins is idempotent; the delta fold instead
-# stamps the applied batch id atomically with the state (storeio's
-# replay-guarded swap) and skips replays at or below the stamp.
-_applied_batch = storeio.applied_batch
-
 
 def _instance_run_id() -> str:
     """Replay-stamp identity used before ``start()`` supplies the real
@@ -139,106 +131,67 @@ def _swap_state(
     )
 
 
-class IncrementalAggregate:
-    """SUM/COUNT (and derived AVG) per group, maintained from the
-    changelog envelope stream.
+def _decoded(image_col: str, names: list[str], types: dict, default) -> list[Column]:
+    """Typed columns read out of one MAP<STRING,STRING> row image;
+    ``types`` maps a field to its Spark type, others take ``default``."""
+    return [
+        decode_image_value(F.col(image_col).getItem(c), types.get(c, default)).alias(c)
+        for c in names
+    ]
 
-    ``group_cols``/``value_col`` name fields inside the row images;
-    ``types`` maps each to its Spark type (group keys default STRING).
-    """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        group_cols: list[str],
-        value_col: str,
-        state_path: str,
-        types: dict | None = None,
-    ):
+class _Fold:
+    """What every IVM member shares: torn-swap recovery, the replay
+    guard, the state read and the availableNow ``foreachBatch`` start.
+    Subclasses implement ``_fold(batch, batch_id)``; ``process_batch``
+    runs it unless the batch id is at or below the state's stamp."""
+
+    _query_name = "ivm"
+
+    def __init__(self, spark: SparkSession, state_path: str):
         self.spark = spark
-        self.group_cols = group_cols
-        self.value_col = value_col
         self.state_path = state_path
-        self.types = types or {}
         self._run_id: str = _instance_run_id()  # start() swaps in the checkpoint dir
         storeio.recover(state_path)  # promote a torn swap's .old- state before first read
-
-    # -- envelope → signed contributions --------------------------------
-
-    def _image(self, batch: DataFrame, image_col: str, sign: int) -> DataFrame:
-        from pyspark.sql import types as T
-
-        cols = [
-            decode_image_value(
-                F.col(image_col).getItem(c), self.types.get(c, T.StringType())
-            ).alias(c)
-            for c in self.group_cols
-        ]
-        val = F.col(image_col).getItem(self.value_col).cast(_SUM_T)
-        return batch.select(*cols, val.alias("__v"), F.lit(sign).alias("__sign"))
-
-    def _delta(self, batch: DataFrame) -> DataFrame:
-        plus = self._image(
-            batch.filter(F.col("op").isin(OP_INSERT, OP_UPDATE)), "data", 1
-        )
-        minus = self._image(
-            batch.filter(F.col("op").isin(OP_DELETE, OP_UPDATE)), "before", -1
-        )
-        both = plus.unionByName(minus)
-        return both.groupBy(*self.group_cols).agg(
-            F.sum(F.col("__sign") * F.col("__v")).cast(_SUM_T).alias("sum_val"),
-            F.sum("__sign").cast("long").alias("n_rows"),
-        )
-
-    # -- state ----------------------------------------------------------
 
     def _state(self) -> DataFrame | None:
         if not os.path.exists(self.state_path):
             return None
         return self.spark.read.parquet(self.state_path)
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        applied = _applied_batch(self.state_path, run_id=self._run_id)
-        if applied is not None and batch_id <= applied:
-            return  # crash-replay of an already-folded batch
-        delta = self._delta(batch)
-        state = self._state()
-        merged = delta if state is None else state.unionByName(delta)
-        # keep groups whose running count is negative or whose sum is
-        # non-zero: a delete can arrive BEFORE its insert (cross-segment
-        # reordering), and dropping the in-flight negative would lose it
-        # — deltas are only commutative if nothing is discarded. The one
-        # safe compaction is the exact identity (n=0 AND sum=0).
-        combined = (
-            merged.groupBy(*self.group_cols)
-            .agg(
-                F.sum("sum_val").cast(_SUM_T).alias("sum_val"),
-                F.sum("n_rows").cast("long").alias("n_rows"),
-            )
-            .filter(~((F.col("n_rows") == 0) & (F.col("sum_val") == 0)))
-        )
-        _swap_state(combined, self.state_path, batch_id, run_id=self._run_id)
-
-    def read_table(self) -> DataFrame:
-        """Current aggregate: group cols, row count, exact sum (as
-        double) and the derived average."""
+    def _require_state(self) -> DataFrame:
         state = self._state()
         if state is None:
             raise FileNotFoundError(f"no IVM state at {self.state_path}")
-        state = state.filter(F.col("n_rows") > 0)  # hide in-flight negatives
-        return state.select(
-            *self.group_cols,
-            "n_rows",
-            F.col("sum_val").cast("double").alias("sum_val"),
-            (F.col("sum_val").cast("double") / F.col("n_rows")).alias("avg_val"),
-        )
+        return state
+
+    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+        # Replay guard. Deltas are NOT idempotent (folding a batch twice
+        # adds twice), and a crash BETWEEN the foreachBatch write and the
+        # checkpoint commit REPLAYS the batch on restart. The MERGE
+        # materializer survives replay because latest-wins is
+        # idempotent; the folds instead stamp the applied batch id
+        # atomically with the state (storeio's replay-guarded swap) and
+        # skip replays at or below the stamp.
+        applied = storeio.applied_batch(self.state_path, run_id=self._run_id)
+        if applied is not None and batch_id <= applied:
+            return  # crash-replay of an already-folded batch
+        self._fold(batch, batch_id)
+
+    def _fold(self, batch: DataFrame, batch_id: int) -> None:
+        raise NotImplementedError
 
     def start(
-        self, changes_stream: DataFrame, checkpoint_dir: str, query_name: str = "ivm"
+        self,
+        changes_stream: DataFrame,
+        checkpoint_dir: str,
+        query_name: str | None = None,
     ):
+        """Drain ``changes_stream`` (availableNow) through
+        ``process_batch``; ``query_name`` defaults to the class's own."""
         self._run_id = checkpoint_dir
         return (
-            changes_stream.writeStream.queryName(query_name)
+            changes_stream.writeStream.queryName(query_name or self._query_name)
             .option("checkpointLocation", checkpoint_dir)
             .foreachBatch(self.process_batch)
             .trigger(availableNow=True)
@@ -246,19 +199,67 @@ class IncrementalAggregate:
         )
 
 
-class IncrementalStats:
-    """Mean/variance/stddev per group from the change stream — the
-    streaming twin of ``operators/cdc.py::incremental_stats``. State is
-    the per-group power sums (COUNT(*), COUNT(val), Σval, Σval²), the
-    second fully-foldable IVM member after the histogram: every row's
-    contribution is independent, so retraction is an exact signed
-    delta. The sums accumulate in decimal (val and val² cast per
-    element, then summed exactly), which is what makes long-lived
-    retraction exact — a float accumulator would collect cancellation
-    residue since ``(a + b) − b ≠ a`` in binary float. Same
-    cross-batch commutation (negative groups park hidden) and storeio
-    batch-id + run-id replay guard as :class:`IncrementalAggregate`.
+class _SignedFold(_Fold):
+    """The fully-foldable members' shared fold (Aggregate, Stats,
+    Distinct, Histogram/Mode, Grid) — the streaming side of the
+    signed-delta algebra whose batch side is ``operators/cdc.py``'s
+    ``_fold_sums`` / ``_fold_counts``. Each event contributes
+    ``+data`` (insert, update) and ``−before`` (delete, update) images
+    (``_image``); ``_delta`` aggregates them per cell. The fold unions
+    state and delta, groups by the cell columns and sums every measure
+    at its type. Because addition commutes the fold is order-
+    independent ACROSS batches too: a delete that arrives before its
+    insert parks a negative cell in state (hidden from reads) until the
+    insert lands — deltas only commute if nothing is discarded, so the
+    one safe compaction is the exact identity (every measure zero, NULL
+    counting as zero).
+
+    Subclasses set ``_cells`` (the grouping columns) and ``_measures``
+    (name → Spark type, in state-schema order) and implement
+    ``_image`` and ``_delta_aggs``."""
+
+    _cells: list[str]
+    _measures: dict[str, str]
+
+    def _image(self, batch: DataFrame, image_col: str, sign: int) -> DataFrame:
+        raise NotImplementedError
+
+    def _delta_aggs(self) -> list[Column]:
+        raise NotImplementedError
+
+    def _delta(self, batch: DataFrame) -> DataFrame:
+        plus = self._image(
+            batch.filter(F.col("op").isin(OP_INSERT, OP_UPDATE)), "data", 1
+        )
+        minus = self._image(
+            batch.filter(F.col("op").isin(OP_DELETE, OP_UPDATE)), "before", -1
+        )
+        return plus.unionByName(minus).groupBy(*self._cells).agg(*self._delta_aggs())
+
+    def _fold(self, batch: DataFrame, batch_id: int) -> None:
+        delta = self._delta(batch)
+        state = self._state()
+        merged = delta if state is None else state.unionByName(delta)
+        identity = F.lit(True)
+        for m in self._measures:
+            identity = identity & (F.coalesce(F.col(m), F.lit(0)) == 0)
+        combined = (
+            merged.groupBy(*self._cells)
+            .agg(*[F.sum(m).cast(t).alias(m) for m, t in self._measures.items()])
+            .filter(~identity)
+        )
+        _swap_state(combined, self.state_path, batch_id, run_id=self._run_id)
+
+
+class IncrementalAggregate(_SignedFold):
+    """SUM/COUNT (and derived AVG) per group, maintained from the
+    changelog envelope stream.
+
+    ``group_cols``/``value_col`` name fields inside the row images;
+    ``types`` maps each to its Spark type (group keys default STRING).
     """
+
+    _measures = {"sum_val": _SUM_T, "n_rows": "long"}
 
     def __init__(
         self,
@@ -268,89 +269,97 @@ class IncrementalStats:
         state_path: str,
         types: dict | None = None,
     ):
-        self.spark = spark
+        super().__init__(spark, state_path)
         self.group_cols = group_cols
         self.value_col = value_col
-        self.state_path = state_path
         self.types = types or {}
-        self._run_id: str = _instance_run_id()  # start() swaps in the checkpoint dir
-        storeio.recover(state_path)  # promote a torn swap's .old- state before first read
+        self._cells = group_cols
 
     def _image(self, batch: DataFrame, image_col: str, sign: int) -> DataFrame:
-        from pyspark.sql import types as T
+        val = F.col(image_col).getItem(self.value_col).cast(_SUM_T)
+        return batch.select(
+            *_decoded(image_col, self.group_cols, self.types, T.StringType()),
+            val.alias("__v"),
+            F.lit(sign).alias("__sign"),
+        )
 
-        cols = [
-            decode_image_value(
-                F.col(image_col).getItem(c), self.types.get(c, T.StringType())
-            ).alias(c)
-            for c in self.group_cols
+    def _delta_aggs(self) -> list[Column]:
+        return [
+            F.sum(F.col("__sign") * F.col("__v")).cast(_SUM_T).alias("sum_val"),
+            F.sum("__sign").cast("long").alias("n_rows"),
         ]
+
+    def read_table(self) -> DataFrame:
+        """Current aggregate: group cols, row count, exact sum (as
+        double) and the derived average."""
+        # hide in-flight negatives
+        state = self._require_state().filter(F.col("n_rows") > 0)
+        return state.select(
+            *self.group_cols,
+            "n_rows",
+            F.col("sum_val").cast("double").alias("sum_val"),
+            (F.col("sum_val").cast("double") / F.col("n_rows")).alias("avg_val"),
+        )
+
+
+class IncrementalStats(_SignedFold):
+    """Mean/variance/stddev per group from the change stream — the
+    streaming side of ``operators/cdc.py::incremental_stats`` (both
+    fold the same signed power sums). State is the per-group power sums
+    (COUNT(*), COUNT(val), Σval, Σval²): every row's contribution is
+    independent, so retraction is an exact signed delta. The sums
+    accumulate in decimal (val and val² cast per element, then summed
+    exactly), which is what makes long-lived retraction exact — a float
+    accumulator would collect cancellation residue since
+    ``(a + b) − b ≠ a`` in binary float.
+    """
+
+    _query_name = "ivm_stats"
+    _measures = {
+        "n_rows": "long", "n_vals": "long", "sum_val": _SUM_T, "sum_sq": _SUM_T
+    }
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        group_cols: list[str],
+        value_col: str,
+        state_path: str,
+        types: dict | None = None,
+    ):
+        super().__init__(spark, state_path)
+        self.group_cols = group_cols
+        self.value_col = value_col
+        self.types = types or {}
+        self._cells = group_cols
+
+    def _image(self, batch: DataFrame, image_col: str, sign: int) -> DataFrame:
         val = decode_image_value(
             F.col(image_col).getItem(self.value_col),
             self.types.get(self.value_col, T.DoubleType()),
         )
         return batch.select(
-            *cols, val.alias("__val"), F.lit(sign).alias("__sign")
+            *_decoded(image_col, self.group_cols, self.types, T.StringType()),
+            val.alias("__val"),
+            F.lit(sign).alias("__sign"),
         )
 
-    def _delta(self, batch: DataFrame) -> DataFrame:
-        plus = self._image(
-            batch.filter(F.col("op").isin(OP_INSERT, OP_UPDATE)), "data", 1
-        )
-        minus = self._image(
-            batch.filter(F.col("op").isin(OP_DELETE, OP_UPDATE)), "before", -1
-        )
-        both = plus.unionByName(minus)
+    def _delta_aggs(self) -> list[Column]:
         v = F.col("__val")
         sg = F.col("__sign")
-        return both.groupBy(*self.group_cols).agg(
+        return [
             F.sum(sg).cast("long").alias("n_rows"),
             F.sum(F.when(v.isNotNull(), sg).otherwise(0)).cast("long").alias("n_vals"),
             F.sum(sg * v.cast("decimal(18,6)")).cast(_SUM_T).alias("sum_val"),
             F.sum(sg * (v * v).cast("decimal(28,6)")).cast(_SUM_T).alias("sum_sq"),
-        )
-
-    def _state(self) -> DataFrame | None:
-        if not os.path.exists(self.state_path):
-            return None
-        return self.spark.read.parquet(self.state_path)
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        applied = _applied_batch(self.state_path, run_id=self._run_id)
-        if applied is not None and batch_id <= applied:
-            return  # crash-replay of an already-folded batch
-        delta = self._delta(batch)
-        state = self._state()
-        merged = delta if state is None else state.unionByName(delta)
-        # negatives park (cross-batch commutation); only the exact
-        # identity compacts away — same rule as IncrementalAggregate
-        combined = (
-            merged.groupBy(*self.group_cols)
-            .agg(
-                F.sum("n_rows").cast("long").alias("n_rows"),
-                F.sum("n_vals").cast("long").alias("n_vals"),
-                F.sum("sum_val").cast(_SUM_T).alias("sum_val"),
-                F.sum("sum_sq").cast(_SUM_T).alias("sum_sq"),
-            )
-            .filter(
-                ~(
-                    (F.col("n_rows") == 0)
-                    & (F.col("n_vals") == 0)
-                    & (F.col("sum_val") == 0)
-                    & (F.col("sum_sq") == 0)
-                )
-            )
-        )
-        _swap_state(combined, self.state_path, batch_id, run_id=self._run_id)
+        ]
 
     def read_table(self) -> DataFrame:
         """Current per-group statistics derived from the maintained
         power sums: row/value counts, exact-sum mean, sample variance
         and stddev (NULL until a group holds ≥ 2 values)."""
-        state = self._state()
-        if state is None:
-            raise FileNotFoundError(f"no IVM state at {self.state_path}")
-        state = state.filter(F.col("n_rows") > 0)  # hide in-flight negatives
+        # hide in-flight negatives
+        state = self._require_state().filter(F.col("n_rows") > 0)
         n = F.col("n_vals")
         sv = F.col("sum_val").cast("double")
         sq = F.col("sum_sq").cast("double")
@@ -364,20 +373,8 @@ class IncrementalStats:
             F.sqrt(var).alias("stddev_val"),
         )
 
-    def start(
-        self, changes_stream: DataFrame, checkpoint_dir: str, query_name: str = "ivm_stats"
-    ):
-        self._run_id = checkpoint_dir
-        return (
-            changes_stream.writeStream.queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
 
-
-class IncrementalMinMax:
+class IncrementalMinMax(_Fold):
     """MIN/MAX per group from the change stream — with the honest
     treatment of their non-distributivity: a delete can only be folded
     in when it provably does NOT remove the current extreme (the
@@ -392,6 +389,8 @@ class IncrementalMinMax:
     silently wrong, and ``read_table`` surfaces it.
     """
 
+    _query_name = "ivm_minmax"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -400,34 +399,18 @@ class IncrementalMinMax:
         state_path: str,
         types: dict | None = None,
     ):
-        self.spark = spark
+        super().__init__(spark, state_path)
         self.group_cols = group_cols
         self.value_col = value_col
-        self.state_path = state_path
         self.types = types or {}
-        self._run_id: str = _instance_run_id()  # start() swaps in the checkpoint dir
-        storeio.recover(state_path)  # promote a torn swap's .old- state before first read
 
     def _image(self, batch: DataFrame, image_col: str) -> DataFrame:
-        from pyspark.sql import types as T
-
-        cols = [
-            decode_image_value(
-                F.col(image_col).getItem(c), self.types.get(c, T.StringType())
-            ).alias(c)
-            for c in [*self.group_cols, self.value_col]
-        ]
+        cols = _decoded(
+            image_col, [*self.group_cols, self.value_col], self.types, T.StringType()
+        )
         return batch.select(*cols).withColumnRenamed(self.value_col, "__v")
 
-    def _state(self) -> DataFrame | None:
-        if not os.path.exists(self.state_path):
-            return None
-        return self.spark.read.parquet(self.state_path)
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        applied = _applied_batch(self.state_path, run_id=self._run_id)
-        if applied is not None and batch_id <= applied:
-            return  # crash-replay of an already-folded batch
+    def _fold(self, batch: DataFrame, batch_id: int) -> None:
         ins = self._image(
             batch.filter(F.col("op").isin(OP_INSERT, OP_UPDATE)), "data"
         ).groupBy(*self.group_cols).agg(
@@ -501,25 +484,12 @@ class IncrementalMinMax:
         return n
 
     def read_table(self) -> DataFrame:
-        state = self._state()
-        if state is None:
-            raise FileNotFoundError(f"no IVM state at {self.state_path}")
-        return state.select(*self.group_cols, "min_val", "max_val", "dirty")
-
-    def start(
-        self, changes_stream: DataFrame, checkpoint_dir: str, query_name: str = "ivm_minmax"
-    ):
-        self._run_id = checkpoint_dir
-        return (
-            changes_stream.writeStream.queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .trigger(availableNow=True)
-            .start()
+        return self._require_state().select(
+            *self.group_cols, "min_val", "max_val", "dirty"
         )
 
 
-class IncrementalDistinct:
+class IncrementalDistinct(_SignedFold):
     """COUNT(DISTINCT value) + COUNT(*) per group from the change
     stream — the duplicate-SENSITIVE aggregate, maintained exactly with
     the classical **support count** state: one row per ``(group, value)``
@@ -528,23 +498,24 @@ class IncrementalDistinct:
     retraction decrements support instead of guessing whether the value
     still exists elsewhere.
 
-    The fold is the same signed-delta algebra as
-    :class:`IncrementalAggregate` (+data image, −before image), so it
-    keeps its commutativity-across-batches property: a delete arriving
-    before its insert parks the pair at negative support (hidden from
-    reads) until the insert lands; only exact zeros are compacted.
-    NULL values follow SQL semantics — invisible to COUNT(DISTINCT),
-    counted by COUNT(*) — by keeping NULL-valued pairs in the support
-    table but excluding them from the distinct derivation.
+    The fold is the shared signed fold with the (group, value) pair as
+    the cell, so a delete arriving before its insert parks the pair at
+    negative support (hidden from reads) until the insert lands. NULL
+    values follow SQL semantics — invisible to COUNT(DISTINCT), counted
+    by COUNT(*) — by keeping NULL-valued pairs in the support table
+    (groupBy treats NULL as its own key) but excluding them from the
+    distinct derivation.
 
     State size is O(distinct (group, value) pairs), NOT O(base rows) —
     the irreducible cost of exact distinct maintenance (the approximate
     alternative is an HLL sketch, which cannot retract). Per-batch cost
-    is O(batch + touched pairs). Crash-replay safe via the same
-    ``storeio`` batch-id stamp as the other folds (deltas are not
-    idempotent). Batch twin: ``operators/cdc.py::incremental_distinct``
-    (minimal-image form, support looked up from the base by semi-join).
+    is O(batch + touched pairs). The batch operator
+    ``operators/cdc.py::incremental_distinct`` covers the minimal-image
+    case (support looked up from the base by semi-join).
     """
+
+    _query_name = "ivm_distinct"
+    _measures = {"n_sup": "long"}
 
     def __init__(
         self,
@@ -554,72 +525,30 @@ class IncrementalDistinct:
         state_path: str,
         types: dict | None = None,
     ):
-        self.spark = spark
+        super().__init__(spark, state_path)
         self.group_cols = group_cols
         self.value_col = value_col
-        self.state_path = state_path
         self.types = types or {}
-        self._run_id: str = _instance_run_id()  # start() swaps in the checkpoint dir
-        storeio.recover(state_path)  # promote a torn swap's .old- state before first read
+        self._cells = [*group_cols, "__v"]
 
     def _image(self, batch: DataFrame, image_col: str, sign: int) -> DataFrame:
-        from pyspark.sql import types as T
-
-        cols = [
-            decode_image_value(
-                F.col(image_col).getItem(c), self.types.get(c, T.StringType())
-            ).alias(c)
-            for c in self.group_cols
-        ]
         val = decode_image_value(
             F.col(image_col).getItem(self.value_col),
             self.types.get(self.value_col, T.StringType()),
         )
-        return batch.select(*cols, val.alias("__v"), F.lit(sign).alias("__sign"))
-
-    def _delta(self, batch: DataFrame) -> DataFrame:
-        plus = self._image(
-            batch.filter(F.col("op").isin(OP_INSERT, OP_UPDATE)), "data", 1
-        )
-        minus = self._image(
-            batch.filter(F.col("op").isin(OP_DELETE, OP_UPDATE)), "before", -1
-        )
-        return (
-            plus.unionByName(minus)
-            .groupBy(*self.group_cols, "__v")
-            .agg(F.sum("__sign").cast("long").alias("n_sup"))
+        return batch.select(
+            *_decoded(image_col, self.group_cols, self.types, T.StringType()),
+            val.alias("__v"),
+            F.lit(sign).alias("__sign"),
         )
 
-    def _state(self) -> DataFrame | None:
-        if not os.path.exists(self.state_path):
-            return None
-        return self.spark.read.parquet(self.state_path)
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        applied = _applied_batch(self.state_path, run_id=self._run_id)
-        if applied is not None and batch_id <= applied:
-            return  # crash-replay of an already-folded batch
-        delta = self._delta(batch)
-        state = self._state()
-        merged = delta if state is None else state.unionByName(delta)
-        # NULL-safe pair grouping: groupBy treats NULL as its own key,
-        # which is exactly the bucket COUNT(*) needs and COUNT(DISTINCT)
-        # ignores. Keep negative supports (cross-batch commutation);
-        # compact exact zeros only.
-        combined = (
-            merged.groupBy(*self.group_cols, "__v")
-            .agg(F.sum("n_sup").cast("long").alias("n_sup"))
-            .filter(F.col("n_sup") != 0)
-        )
-        _swap_state(combined, self.state_path, batch_id, run_id=self._run_id)
+    def _delta_aggs(self) -> list[Column]:
+        return [F.sum("__sign").cast("long").alias("n_sup")]
 
     def read_table(self) -> DataFrame:
         """Current per-group distinct + row counts; groups whose running
         row count is not yet positive (in-flight reordering) are hidden."""
-        state = self._state()
-        if state is None:
-            raise FileNotFoundError(f"no IVM state at {self.state_path}")
-        derived = state.groupBy(*self.group_cols).agg(
+        derived = self._require_state().groupBy(*self.group_cols).agg(
             F.sum(
                 ((F.col("n_sup") > 0) & F.col("__v").isNotNull()).cast("long")
             ).alias("n_distinct"),
@@ -627,25 +556,13 @@ class IncrementalDistinct:
         )
         return derived.filter(F.col("n_rows") > 0)
 
-    def start(
-        self, changes_stream: DataFrame, checkpoint_dir: str, query_name: str = "ivm_distinct"
-    ):
-        self._run_id = checkpoint_dir
-        return (
-            changes_stream.writeStream.queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
 
-
-class IncrementalJoin:
+class IncrementalJoin(_Fold):
     """The FK join view ``fact ⋈ dim`` maintained from a changelog
-    stream carrying BOTH tables' events — the streaming twin of
-    ``operators/cdc.py::incremental_join`` (the textbook bilinear rule
-    ``Δ(A⋈B) = ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB`` specialized to keyed MERGE
-    streams), folded per micro-batch against three persistent
+    stream carrying BOTH tables' events — each micro-batch runs the
+    batch operator ``operators/cdc.py::incremental_join`` (the textbook
+    bilinear rule ``Δ(A⋈B) = ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB`` specialized to keyed
+    MERGE streams) against three persistent
     relations: the two sides' latest-wins states (typed columns + pos +
     op, delete tombstones kept — the flat materializer's layout, so
     late events lose latest-wins) and the maintained view itself.
@@ -668,6 +585,8 @@ class IncrementalJoin:
     the view.
     """
 
+    _query_name = "ivm_join"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -681,8 +600,7 @@ class IncrementalJoin:
         fk: list[str] | None = None,
         assume_immutable_keys: bool = False,
     ):
-        self.spark = spark
-        self.state_path = state_path
+        super().__init__(spark, state_path)
         self.fact_table = fact_table
         self.fact_fields = dict(fact_fields)
         self.fact_keys = fact_keys
@@ -695,15 +613,10 @@ class IncrementalJoin:
         # source with enforced-immutable PKs may opt out — an update
         # whose key DOES mutate then corrupts state (old key stays live)
         self.assume_immutable_keys = assume_immutable_keys
-        self._run_id: str = _instance_run_id()  # start() swaps in the checkpoint dir
-        storeio.recover(state_path)  # promote a torn swap's .old- state before first read
-        storeio.recover(state_path)
 
     # -- state ----------------------------------------------------------
 
     def _side_schema(self, fields: dict):
-        from pyspark.sql import types as T
-
         return T.StructType(
             [T.StructField(n, t) for n, t in fields.items()]
             + [T.StructField("pos", T.StringType()), T.StructField("op", T.StringType())]
@@ -746,7 +659,7 @@ class IncrementalJoin:
         return batch.select(*cols, F.col("pos").alias("pos"), F.col("op").alias("op"))
 
     def _fold_prelude(self, batch: DataFrame):
-        """Shared per-batch front half (also used by the join-AGG twin):
+        """Shared per-batch front half (also used by IncrementalJoinAgg):
         decode + PK-mutation split + per-side latest-wins effective
         sets. Returns (eff_f, new_f_state, eff_d, new_d_state,
         fact_live, dim_live) where *_live are the PRE-change sides."""
@@ -807,12 +720,9 @@ class IncrementalJoin:
         dim_live = d_state.filter(F.col("op") != OP_DELETE).select(*self.dim_fields)
         return eff_f, new_f_state, eff_d, new_d_state, fact_live, dim_live
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+    def _fold(self, batch: DataFrame, batch_id: int) -> None:
         from ..operators.cdc import incremental_join
 
-        applied = storeio.applied_batch(self.state_path, run_id=self._run_id)
-        if applied is not None and batch_id <= applied:
-            return  # crash-replay of an already-folded batch
         (
             eff_f,
             new_f_state,
@@ -845,23 +755,11 @@ class IncrementalJoin:
             run_id=self._run_id,
         )
 
-    def start(
-        self, changes_stream: DataFrame, checkpoint_dir: str, query_name: str = "ivm_join"
-    ):
-        self._run_id = checkpoint_dir
-        return (
-            changes_stream.writeStream.queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-
 
 class IncrementalJoinAgg(IncrementalJoin):
     """``SELECT group_cols, COUNT(*), SUM(sum_cols…) FROM fact ⋈ dim
     GROUP BY group_cols`` maintained from the two-table changelog
-    stream — the streaming twin of
+    stream — each micro-batch runs the batch operator
     ``operators/cdc.py::incremental_join_agg`` (the 10th algebra).
 
     Same decode / PK-mutation split / per-side latest-wins prelude as
@@ -919,12 +817,9 @@ class IncrementalJoinAgg(IncrementalJoin):
             raise FileNotFoundError(f"no join-agg state at {self.state_path}")
         return a
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+    def _fold(self, batch: DataFrame, batch_id: int) -> None:
         from ..operators.cdc import incremental_join_agg
 
-        applied = storeio.applied_batch(self.state_path, run_id=self._run_id)
-        if applied is not None and batch_id <= applied:
-            return  # crash-replay of an already-folded batch
         (
             eff_f,
             new_f_state,
@@ -956,9 +851,9 @@ class IncrementalJoinAgg(IncrementalJoin):
         )
 
 
-class IncrementalTopK:
+class IncrementalTopK(_Fold):
     """Per-group top-k rows (rank by value DESC, ties by key) from the
-    change stream — the streaming twin of
+    change stream — the full-image form of
     ``operators/cdc.py::incremental_topk``, with min/max's honest
     treatment of retraction generalized to rank k: state holds exactly
     the current top-k rows per group, inserts of NEW keys fold (union +
@@ -983,6 +878,8 @@ class IncrementalTopK:
     batch-id + run-id stamp as the other folds (the fold is not
     idempotent)."""
 
+    _query_name = "ivm_topk"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -994,46 +891,36 @@ class IncrementalTopK:
         types: dict | None = None,
         assume_immutable_keys: bool = False,
     ):
-        self.spark = spark
+        super().__init__(spark, state_path)
         self.group_cols = group_cols
         self.key_cols = key_cols
         self.value_col = value_col
         self.k = k
-        self.state_path = state_path
         self.types = types or {}
         # see IncrementalJoin: opting out reclaims ~20% fold throughput
         # but corrupts state if a PK ever mutates
         self.assume_immutable_keys = assume_immutable_keys
-        self._run_id: str = _instance_run_id()  # start() swaps in the checkpoint dir
-        storeio.recover(state_path)  # promote a torn swap's .old- state before first read
 
     def _image(self, batch: DataFrame, image_col: str) -> DataFrame:
-        from pyspark.sql import types as T
+        cols = _decoded(
+            image_col,
+            [*self.group_cols, *self.key_cols, self.value_col],
+            self.types,
+            T.StringType(),
+        )
+        return batch.select(*cols, "pos").withColumnRenamed(self.value_col, "__v")
 
-        cols = [
-            decode_image_value(
-                F.col(image_col).getItem(c), self.types.get(c, T.StringType())
-            ).alias(c)
-            for c in [*self.group_cols, *self.key_cols, self.value_col]
-        ]
-        return batch.select(*cols).withColumnRenamed(self.value_col, "__v")
-
-    def _rank(self, df: DataFrame) -> DataFrame:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy(*self.group_cols).orderBy(
+    def _order(self):
+        return Window.partitionBy(*self.group_cols).orderBy(
             F.desc_nulls_last("__v"), *[F.asc(c) for c in self.key_cols]
         )
+
+    def _rank(self, df: DataFrame) -> DataFrame:
         return (
-            df.withColumn("__rn", F.row_number().over(w))
+            df.withColumn("__rn", F.row_number().over(self._order()))
             .filter(F.col("__rn") <= self.k)
             .drop("__rn")
         )
-
-    def _state(self) -> DataFrame | None:
-        if not os.path.exists(self.state_path):
-            return None
-        return self.spark.read.parquet(self.state_path)
 
     def _sentinel_pred(self) -> Column:
         """A sentinel row carries a dirty flag for a group with no
@@ -1043,13 +930,7 @@ class IncrementalTopK:
             p = p & F.col(c).isNull()
         return p
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import types as T
-        from pyspark.sql.window import Window
-
-        applied = _applied_batch(self.state_path, run_id=self._run_id)
-        if applied is not None and batch_id <= applied:
-            return  # crash-replay of an already-folded batch
+    def _fold(self, batch: DataFrame, batch_id: int) -> None:
         rows = batch.filter(F.col("op").isin(OP_INSERT, OP_UPDATE, OP_DELETE))
         # PK mutation is routed as delete(old)+insert(new): the per-key
         # windows below partition by coalesce(data, before) — the NEW
@@ -1057,17 +938,6 @@ class IncrementalTopK:
         # key's final op as a live insert
         if not self.assume_immutable_keys:
             rows = _split_key_mutations(rows, self.key_cols, self.types)
-
-        def img(df: DataFrame, image_col: str) -> DataFrame:
-            cols = [
-                decode_image_value(
-                    F.col(image_col).getItem(c), self.types.get(c, T.StringType())
-                ).alias(c)
-                for c in [*self.group_cols, *self.key_cols, self.value_col]
-            ]
-            return df.select(*cols, "pos").withColumnRenamed(
-                self.value_col, "__v"
-            )
 
         # Per-key collapse of the micro-batch: several events may hit
         # one key (insert+delete, insert+update, …). The retraction
@@ -1093,7 +963,7 @@ class IncrementalTopK:
             .select(*self.key_cols, F.col("op").alias("__final_op"))
         )
         ins = (
-            img(rows.filter(F.col("op").isin(OP_INSERT, OP_UPDATE)), "data")
+            self._image(rows.filter(F.col("op").isin(OP_INSERT, OP_UPDATE)), "data")
             .withColumn("__rn", F.row_number().over(w_last))
             .filter(F.col("__rn") == 1)
             .join(final_op, on=self.key_cols)
@@ -1101,7 +971,7 @@ class IncrementalTopK:
             .select(*self.group_cols, *self.key_cols, "__v")
         )
         rem = (
-            img(rows.filter(F.col("op").isin(OP_DELETE, OP_UPDATE)), "before")
+            self._image(rows.filter(F.col("op").isin(OP_DELETE, OP_UPDATE)), "before")
             .withColumn("__rn", F.row_number().over(w_first))
             .filter(F.col("__rn") == 1)
             .select(*self.group_cols, *self.key_cols, "__v")
@@ -1217,17 +1087,10 @@ class IncrementalTopK:
         staleness instead of hiding it. Sentinel rows (dirty groups
         with no stored rows) appear with NULL keys/value and NULL
         rank."""
-        state = self._state()
-        if state is None:
-            raise FileNotFoundError(f"no IVM state at {self.state_path}")
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy(*self.group_cols).orderBy(
-            F.desc_nulls_last("__v"), *[F.asc(c) for c in self.key_cols]
-        )
+        state = self._require_state()
         real = (
             state.filter(~self._sentinel_pred())
-            .withColumn("rank", F.row_number().over(w))
+            .withColumn("rank", F.row_number().over(self._order()))
         )
         sentinels = state.filter(self._sentinel_pred()).withColumn(
             "rank", F.lit(None).cast("int")
@@ -1240,29 +1103,20 @@ class IncrementalTopK:
             "dirty",
         )
 
-    def start(
-        self, changes_stream: DataFrame, checkpoint_dir: str, query_name: str = "ivm_topk"
-    ):
-        self._run_id = checkpoint_dir
-        return (
-            changes_stream.writeStream.queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
 
-
-class IncrementalHistogram:
+class IncrementalHistogram(_SignedFold):
     """Fixed-bin value histogram per group from the change stream —
     the fully-foldable IVM case (static bin edges make retraction an
     exact signed delta; contrast MinMax/TopK, which need dirty-repair).
-    Same fold algebra, replay guard, and cross-batch commutation as
-    :class:`IncrementalAggregate`, keyed by (group, bin); negative
-    in-flight cells park in state and are hidden from reads.
-    ``read_table`` answers bin-resolution p50/p90/p99 via the integer
-    cumulative walk shared with the batch twin
+    The shared signed fold keyed by (group, bin): negative in-flight
+    cells park in state and are hidden from reads. ``read_table``
+    answers bin-resolution p50/p90/p99 via the integer cumulative walk
+    shared with the batch operator
     (``operators/cdc.py::histogram_percentiles``)."""
+
+    _query_name = "ivm_hist"
+    _measures = {"n": "long"}
+    _value_type = T.DoubleType()
 
     def __init__(
         self,
@@ -1275,89 +1129,50 @@ class IncrementalHistogram:
         state_path: str,
         types: dict | None = None,
     ):
-        self.spark = spark
+        super().__init__(spark, state_path)
         self.group_cols = group_cols
         self.value_col = value_col
         self.lo, self.hi, self.nbins = lo, hi, nbins
-        self.state_path = state_path
         self.types = types or {}
-        self._run_id: str = _instance_run_id()  # start() swaps in the checkpoint dir
-        storeio.recover(state_path)  # promote a torn swap's .old- state before first read
+        self._cells = [*group_cols, "bin"]
 
-    def _image(self, batch: DataFrame, image_col: str, sign: int) -> DataFrame:
-        from pyspark.sql import types as T
-
+    def _cell(self, val: Column) -> Column:
         from ..operators.cdc import _bin_expr
 
-        cols = [
-            decode_image_value(
-                F.col(image_col).getItem(c), self.types.get(c, T.StringType())
-            ).alias(c)
-            for c in self.group_cols
-        ]
+        return _bin_expr(val, self.lo, self.hi, self.nbins)
+
+    def _image(self, batch: DataFrame, image_col: str, sign: int) -> DataFrame:
         val = decode_image_value(
             F.col(image_col).getItem(self.value_col),
-            self.types.get(self.value_col, T.DoubleType()),
+            self.types.get(self.value_col, self._value_type),
         )
         return (
-            batch.select(*cols, val.alias("__val"))
+            batch.select(
+                *_decoded(image_col, self.group_cols, self.types, T.StringType()),
+                val.alias("__val"),
+            )
             .filter(F.col("__val").isNotNull())
             .select(
                 *self.group_cols,
-                _bin_expr("__val", self.lo, self.hi, self.nbins).alias("bin"),
+                self._cell(F.col("__val")).alias("bin"),
                 F.lit(sign).alias("__sign"),
             )
         )
 
-    def _delta(self, batch: DataFrame) -> DataFrame:
-        plus = self._image(
-            batch.filter(F.col("op").isin(OP_INSERT, OP_UPDATE)), "data", 1
-        )
-        minus = self._image(
-            batch.filter(F.col("op").isin(OP_DELETE, OP_UPDATE)), "before", -1
-        )
-        return (
-            plus.unionByName(minus)
-            .groupBy(*self.group_cols, "bin")
-            .agg(F.sum("__sign").cast("long").alias("n"))
-        )
-
-    def _state(self) -> DataFrame | None:
-        if not os.path.exists(self.state_path):
-            return None
-        return self.spark.read.parquet(self.state_path)
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        applied = _applied_batch(self.state_path, run_id=self._run_id)
-        if applied is not None and batch_id <= applied:
-            return  # crash-replay of an already-folded batch
-        delta = self._delta(batch)
-        state = self._state()
-        merged = delta if state is None else state.unionByName(delta)
-        combined = (
-            merged.groupBy(*self.group_cols, "bin")
-            .agg(F.sum("n").cast("long").alias("n"))
-            .filter(F.col("n") != 0)  # keep negatives (cross-batch commute)
-        )
-        _swap_state(combined, self.state_path, batch_id, run_id=self._run_id)
+    def _delta_aggs(self) -> list[Column]:
+        return [F.sum("__sign").cast("long").alias("n")]
 
     def histogram(self) -> DataFrame:
-        state = self._state()
-        if state is None:
-            raise FileNotFoundError(f"no IVM state at {self.state_path}")
-        return state.filter(F.col("n") > 0)
+        return self._require_state().filter(F.col("n") > 0)
 
     def staleness(self) -> DataFrame:
         """Per-group ``has_negative``: true while a retraction that
         arrived before its matching insert parks a negative cell in
         state — the group's visible bin totals transiently overstate
-        the merged count until the insert lands. The histogram twin of
-        IncrementalTopK's ``dirty`` column: readers get a signal, not
-        a silently-wrong total."""
-        state = self._state()
-        if state is None:
-            raise FileNotFoundError(f"no IVM state at {self.state_path}")
-        return state.groupBy(*self.group_cols).agg(
+        the merged count until the insert lands. The histogram's
+        counterpart of IncrementalTopK's ``dirty`` column: readers get
+        a signal, not a silently-wrong total."""
+        return self._require_state().groupBy(*self.group_cols).agg(
             F.max(F.col("n") < 0).alias("has_negative")
         )
 
@@ -1368,24 +1183,12 @@ class IncrementalHistogram:
             self.staleness(), on=self.group_cols, how="left"
         )
 
-    def start(
-        self, changes_stream: DataFrame, checkpoint_dir: str, query_name: str = "ivm_hist"
-    ):
-        self._run_id = checkpoint_dir
-        return (
-            changes_stream.writeStream.queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-
 
 class IncrementalMode(IncrementalHistogram):
-    """MODE maintenance from the change stream — the streaming twin of
-    ``operators/cdc.py::incremental_mode`` (the 9th IVM algebra).
-    Identical fold algebra to the histogram with the exact VALUE as the
-    cell key instead of a static bin: state is (group, value → signed
+    """MODE maintenance from the change stream — the full-image form of
+    ``operators/cdc.py::incremental_mode`` (the 9th IVM algebra; both
+    run the histogram's count-cell fold). The cell key is the exact
+    VALUE instead of a static bin: state is (group, value → signed
     count), retractions fold exactly, negative in-flight cells park in
     state (same ``staleness`` signal) — and ``read_table`` is the
     deterministic top-1 read (count DESC, value ASC) shared with the
@@ -1394,6 +1197,8 @@ class IncrementalMode(IncrementalHistogram):
     State stores the value under the inherited ``bin`` column so every
     fold / swap / replay-guard / staleness path is reused verbatim; the
     read aliases it back to ``mode_value``."""
+
+    _value_type = T.StringType()
 
     def __init__(
         self,
@@ -1409,29 +1214,13 @@ class IncrementalMode(IncrementalHistogram):
             value_col,
             lo=0.0,
             hi=1.0,
-            nbins=1,  # unused: _image is overridden to keep raw values
+            nbins=1,  # unused: _cell keeps raw values
             state_path=state_path,
             types=types,
         )
 
-    def _image(self, batch: DataFrame, image_col: str, sign: int) -> DataFrame:
-        from pyspark.sql import types as T
-
-        cols = [
-            decode_image_value(
-                F.col(image_col).getItem(c), self.types.get(c, T.StringType())
-            ).alias(c)
-            for c in self.group_cols
-        ]
-        val = decode_image_value(
-            F.col(image_col).getItem(self.value_col),
-            self.types.get(self.value_col, T.StringType()),
-        )
-        return (
-            batch.select(*cols, val.alias("bin"))
-            .filter(F.col("bin").isNotNull())
-            .select(*self.group_cols, "bin", F.lit(sign).alias("__sign"))
-        )
+    def _cell(self, val: Column) -> Column:
+        return val
 
     def read_table(self) -> DataFrame:
         from ..operators.cdc import mode_read
@@ -1442,9 +1231,9 @@ class IncrementalMode(IncrementalHistogram):
         )
 
 
-class IncrementalGrid:
+class IncrementalGrid(_SignedFold):
     """Maintained dense hourly time-series grid from the change stream
-    — the streaming twin of ``operators/timeseries._dense_grid`` and
+    — the streaming form of ``operators/timeseries._dense_grid`` and
     the 10th IVM algebra (VERDICT r10 #5).
 
     State is the SPARSE grid: (event_type, hour) → signed event count,
@@ -1459,11 +1248,10 @@ class IncrementalGrid:
     grid instead of rescanning raw events. That is the 100 TB shape:
     per batch the fold costs O(batch + touched cells); the raw event
     volume is never rescanned, and state is calendar-bounded
-    (|types| × |hours|), not data-bounded.
+    (|types| × |hours|), not data-bounded."""
 
-    Same replay guard, cross-batch commutation (negative in-flight
-    cells park in state, hidden from reads), and storeio swap as every
-    other IVM member."""
+    _query_name = "ivm_grid"
+    _measures = {"n_events": "long", "n_vals": "long", "sum_val": "decimal(18,6)"}
 
     def __init__(
         self,
@@ -1473,82 +1261,36 @@ class IncrementalGrid:
         ts_col: str = "ts",
         value_col: str = "value",
     ):
-        self.spark = spark
-        self.state_path = state_path
+        super().__init__(spark, state_path)
         self.type_col = type_col
         self.ts_col = ts_col
         self.value_col = value_col
-        self._run_id: str = _instance_run_id()  # start() swaps in the checkpoint dir
-        storeio.recover(state_path)  # promote a torn swap's .old- state before first read
+        self._cells = [type_col, "hour"]
 
     def _image(self, batch: DataFrame, image_col: str, sign: int) -> DataFrame:
-        from pyspark.sql import types as T
-
-        typ = decode_image_value(
-            F.col(image_col).getItem(self.type_col), T.StringType()
-        )
-        ts = decode_image_value(
-            F.col(image_col).getItem(self.ts_col), T.TimestampNTZType()
-        )
-        val = decode_image_value(
-            F.col(image_col).getItem(self.value_col), T.DoubleType()
-        ).cast("decimal(18,6)")
+        img = F.col(image_col)
+        typ = decode_image_value(img.getItem(self.type_col), T.StringType())
+        ts = decode_image_value(img.getItem(self.ts_col), T.TimestampNTZType())
+        val = decode_image_value(img.getItem(self.value_col), T.DoubleType())
         return batch.select(
             typ.alias(self.type_col),
             F.date_trunc("hour", ts).cast("timestamp_ntz").alias("hour"),
-            val.alias("__v"),
+            val.cast("decimal(18,6)").alias("__v"),
             F.lit(sign).alias("__sign"),
         )
 
-    def _delta(self, batch: DataFrame) -> DataFrame:
-        plus = self._image(
-            batch.filter(F.col("op").isin(OP_INSERT, OP_UPDATE)), "data", 1
-        )
-        minus = self._image(
-            batch.filter(F.col("op").isin(OP_DELETE, OP_UPDATE)), "before", -1
-        )
-        both = plus.unionByName(minus)
-        return both.groupBy(self.type_col, "hour").agg(
-            F.sum("__sign").cast("long").alias("n_events"),
+    def _delta_aggs(self) -> list[Column]:
+        sg = F.col("__sign")
+        return [
+            F.sum(sg).cast("long").alias("n_events"),
             # sum skips NULL __v rows on its own; n_vals tracks how many
             # non-null values the cell holds so the read can render the
             # all-gone cell's sum as NULL exactly like the batch grid
-            F.sum(
-                F.when(F.col("__v").isNotNull(), F.col("__sign")).otherwise(0)
-            ).cast("long").alias("n_vals"),
-            F.sum(F.col("__sign") * F.col("__v")).cast("decimal(18,6)").alias("sum_val"),
-        )
-
-    def _state(self) -> DataFrame | None:
-        if not os.path.exists(self.state_path):
-            return None
-        return self.spark.read.parquet(self.state_path)
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        applied = _applied_batch(self.state_path, run_id=self._run_id)
-        if applied is not None and batch_id <= applied:
-            return  # crash-replay of an already-folded batch
-        delta = self._delta(batch)
-        state = self._state()
-        merged = delta if state is None else state.unionByName(delta)
-        combined = (
-            merged.groupBy(self.type_col, "hour")
-            .agg(
-                F.sum("n_events").cast("long").alias("n_events"),
-                F.sum("n_vals").cast("long").alias("n_vals"),
-                F.sum("sum_val").cast("decimal(18,6)").alias("sum_val"),
-            )
-            # the only safe compaction is the exact identity — keep
-            # in-flight negatives (cross-batch commutation)
-            .filter(
-                ~(
-                    (F.col("n_events") == 0)
-                    & (F.col("n_vals") == 0)
-                    & (F.coalesce(F.col("sum_val"), F.lit(0)) == 0)
-                )
-            )
-        )
-        _swap_state(combined, self.state_path, batch_id, run_id=self._run_id)
+            F.sum(F.when(F.col("__v").isNotNull(), sg).otherwise(0))
+            .cast("long")
+            .alias("n_vals"),
+            F.sum(sg * F.col("__v")).cast("decimal(18,6)").alias("sum_val"),
+        ]
 
     def read_table(self) -> DataFrame:
         """The DENSE grid: (event_type, hour, n_events, hour_value) with
@@ -1557,10 +1299,7 @@ class IncrementalGrid:
         type universe come from the VISIBLE cells (n_events > 0), so a
         fully retracted edge hour shrinks the grid exactly like a batch
         recompute would."""
-        state = self._state()
-        if state is None:
-            raise FileNotFoundError(f"no IVM state at {self.state_path}")
-        vis = state.filter(F.col("n_events") > 0)
+        vis = self._require_state().filter(F.col("n_events") > 0)
         bounds = vis.agg(F.min("hour").alias("lo"), F.max("hour").alias("hi"))
         hours = bounds.select(
             F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("hour")
@@ -1579,16 +1318,4 @@ class IncrementalGrid:
             "hour",
             F.coalesce("n_events", F.lit(0)).alias("n_events"),
             "hour_value",
-        )
-
-    def start(
-        self, changes_stream: DataFrame, checkpoint_dir: str, query_name: str = "ivm_grid"
-    ):
-        self._run_id = checkpoint_dir
-        return (
-            changes_stream.writeStream.queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .trigger(availableNow=True)
-            .start()
         )

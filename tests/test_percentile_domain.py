@@ -83,3 +83,11 @@ def test_matches_builtin_adversarial_doubles(spark, p):
     vals = [1e-17, 1.0, 1.0 + 2**-52, 3.141592653589793, 1e17, -1e17, 0.1, 0.2]
     rows = [("a", v) for v in vals]
     _check(spark, rows, pcts=[p])
+
+
+def test_null_value_fails_loudly(spark):
+    # the precondition is enforced, not silently filtered: an all-NULL
+    # group would otherwise vanish where the built-in emits (g, NULL)
+    df = spark.createDataFrame([("a", 1.0), ("b", None)], "g string, v double")
+    with pytest.raises(Exception, match="domain_percentiles: NULL value"):
+        domain_percentiles(df, ["g"], "v", [0.5], ["p50"]).collect()

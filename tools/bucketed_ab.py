@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Bucketed-base A/B for the top-exponent TPC-H joins (q3/q4/q5, whose
 orders ⋈ lineitem shuffles BOTH growing sides): store orders and
-lineitem bucketed by orderkey (``bucketBy`` + ``sortBy`` saveAsTable,
-the write_bucketed path) and run the IDENTICAL registered query code
+lineitem bucketed by orderkey (``bucketBy`` + ``sortBy`` saveAsTable)
+and run the IDENTICAL registered query code
 over the bucketed tables by swapping the loader the queries call —
 same expressions, same plan shape above the scan, only the base layout
 differs. Interleaved same-session timing (warm once, then alternate
