@@ -557,7 +557,7 @@ class Engine:
         one availableNow drain per view, own checkpoint identity, fold
         cost O(batch + touched cells) per micro-batch with
         calendar-bounded state (streaming/ivm.py::IncrementalGrid).
-        Crash/replay safety is the IVM family's run-scoped batch stamp;
+        Crash/replay safety is the fold's run-scoped batch stamp;
         re-running after a drain is a no-op. The views are DERIVED
         state: downstream ``ts_*`` consumers read them through
         :meth:`read_grid` instead of rescanning raw events — at 100 TB

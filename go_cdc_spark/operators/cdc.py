@@ -409,13 +409,10 @@ def incremental_agg(
     accumulate in exact decimal, so delta-maintenance is bit-identical
     to full recomputation at any parallelism.
 
-    The signed fold (:func:`_fold_sums`) is the algebra
-    ``streaming/ivm.py``'s :class:`IncrementalAggregate` also runs
-    (through ``_SignedFold``); the two differ only in where the
-    before-image comes from. The stream takes it from the event
-    (``binlog_row_image=FULL``); this batch form covers the
-    minimal-image case and LOOKS IT UP from the base table, touching
-    only the changed keys.
+    The signed fold is :func:`_fold_sums`. The before-image is LOOKED
+    UP from the base table, touching only the changed keys, so the
+    operator also covers minimal-image sources (a full-image event
+    carries it, but nothing here depends on that).
 
     Scale shape: the base table is touched only by a semi-join on the
     changed keys (broadcast/DPP-prunable — a change batch is tiny next
@@ -454,8 +451,7 @@ def incremental_minmax(
     removing the row that held a group's extreme makes the runner-up
     unknowable without looking at the data again.
 
-    Dirty-group repair (mirrors ``streaming/ivm.py``'s
-    :class:`IncrementalMinMax`, here in minimal-image batch form):
+    Dirty-group repair, in minimal-image batch form:
 
     - inserts only TIGHTEN extremes: ``least/greatest`` against the
       maintained value, pure delta arithmetic;

@@ -1205,9 +1205,8 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Windowed event dedup: telemetry duplicate suppression — keep one
-# event per (entity, type) within each 10-minute bucket. The batch
-# twin of the streaming dropDuplicatesWithinWatermark path
-# (streaming/pipeline.py stream_dedup); same keys, bounded window.
+# event per (entity, type) within each 10-minute bucket; same keys,
+# bounded window.
 # ---------------------------------------------------------------------------
 
 

@@ -285,7 +285,7 @@ def argtop2_cosine(vec: Column, vnorm: Column, cands: Column) -> Column:
 def _codebook_lits(rows, m: int) -> list[Column]:
     """Per-subspace PQ codebook as PLAN LITERALS: rows are the
     memoized, driver-collected trained codebook (the sanctioned
-    _PQ_MEMO artifact — _pq_fit collects it at build time regardless),
+    _PQ_MEMO artifact — _pq_fit_hit collects it at build time regardless),
     embedded as constant arrays exactly like the LSH _HYPERPLANES.
     Literal codebooks cost nothing per row (constant-folded once),
     where the previous broadcast-join form copied the whole codebook
@@ -1881,18 +1881,6 @@ def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # without it). Same sanctioned-artifact contract as _TRAINED_MEMO:
 # values are bit-exact collected rows, so oracle hashes are unchanged.
 _PQ_MEMO: dict[tuple, tuple] = {}
-
-
-def _pq_fit(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = _PQ_K,
-    m: int = _PQ_M,
-    rounds: int = 1,
-) -> tuple[DataFrame, DataFrame]:
-    """(subvectors, trained codebook as a DataFrame) — see _pq_fit_hit."""
-    subs, hit = _pq_fit_hit(spark, sf_dir, k=k, m=m, rounds=rounds)
-    return subs, spark.createDataFrame(hit[1], hit[0])
 
 
 def _pq_fit_hit(

@@ -45,9 +45,13 @@ Decoded surface (event type → engine action; type codes are the public
   rows two at a time; here the pairing is the same walk over the
   decoded image list).
 
-``pos`` is the event's end-of-event file position (``log_pos``),
-zero-padded so lexicographic order == byte order — the real binlog
-position, exactly the axis the reference checkpoints.
+``pos`` is MySQL's own (file, offset) coordinate: the binlog file's
+sequence number (the numeric name extension, ``binlog.000002`` → 2,
+zero-padded to the extension's six digits) followed by the event's
+end-of-event position (``log_pos``, zero-padded to ``POS_WIDTH``), so
+lexicographic order == (file, byte) order. ``log_pos`` alone restarts
+in every file, so it cannot order an event in ``binlog.000002`` after
+one in ``binlog.000001``.
 
 Scale shape: decoding is a sequential byte-walk on the driver — the
 same shape as the reference's single replication socket (a binlog is
@@ -675,6 +679,27 @@ def _env_str(v):
     return str(v)
 
 
+def binlog_seq(path: str) -> int:
+    """The sequence number in a binlog file name (``binlog.000002`` →
+    2): the order MySQL writes its files in. Raises ``ValueError`` for
+    a name without a numeric extension, whose events could not be
+    ordered against the other files'."""
+    ext = os.path.basename(path).rpartition(".")[2]
+    if not ext.isdigit():
+        raise ValueError(
+            f"binlog file {path!r} has no numeric sequence extension "
+            "(expected e.g. binlog.000001)"
+        )
+    return int(ext)
+
+
+def binlog_pos(file_seq: int, log_pos: int) -> str:
+    """The envelope ``pos`` of an event: the file sequence number,
+    zero-padded like MySQL's file names (six digits), then the end
+    offset zero-padded to ``POS_WIDTH``."""
+    return f"{file_seq:06d}{log_pos:0{POS_WIDTH}d}"
+
+
 @dataclass
 class BinlogEnvelopeDecoder:
     """Binlog bytes → CHANGE_EVENT_SCHEMA envelope dicts, with the
@@ -687,10 +712,10 @@ class BinlogEnvelopeDecoder:
     - QUERY emits ``op='ddl'`` only for the reference's five DDL
       prefixes; BEGIN and DML statements emit nothing.
 
-    ``pos`` = zero-padded ``log_pos`` (the event's real binlog end
-    position). All rows of one statement share its event's pos — the
-    downstream latest-wins collapse orders by (pos) per key, and one
-    statement never touches the same PK twice.
+    ``pos`` = zero-padded file sequence number + zero-padded
+    ``log_pos`` (:func:`binlog_pos`). All rows of one statement share
+    its event's pos — the downstream latest-wins collapse orders by
+    (pos) per key, and one statement never touches the same PK twice.
 
     ``skip_covered`` (a ``GtidSet``) is the ``StartSyncGTID`` resume
     semantic (`incremental.go:141-149`): transactions whose
@@ -713,9 +738,13 @@ class BinlogEnvelopeDecoder:
         self.gtids_seen = GtidSet()
 
     def decode_file(self, path: str) -> list[dict]:
-        return list(self.decode_bytes(open(path, "rb").read()))
+        with open(path, "rb") as f:
+            data = f.read()
+        return list(self.decode_bytes(data, binlog_seq(path)))
 
-    def decode_bytes(self, data: bytes):
+    def decode_bytes(self, data: bytes, file_seq: int = 0):
+        """Events of one binlog file's bytes; ``file_seq`` is the
+        file's sequence number (:func:`binlog_seq`)."""
         for hdr, parsed in self.reader.read_bytes(data):
             kind = parsed[0] if isinstance(parsed, tuple) else "table_map"
             if kind == "gtid":
@@ -732,7 +761,7 @@ class BinlogEnvelopeDecoder:
                 continue
             if self._skipping:
                 continue
-            pos = str(hdr.log_pos).zfill(POS_WIDTH)
+            pos = binlog_pos(file_seq, hdr.log_pos)
             ts = hdr.timestamp or None
             if kind == "xid":
                 yield self._event("commit", None, None, pos, ts, schema=None, table=None)

@@ -78,15 +78,3 @@ def decode_image_value(col: F.Column, data_type: T.DataType) -> F.Column:
     if isinstance(data_type, T.BinaryType):
         return F.unbase64(col)
     return col.cast(data_type)
-
-
-def typed_image(df: DataFrame, image_col: str, schema: T.StructType) -> DataFrame:
-    """Cast a MAP<STRING,STRING> row image to typed columns (materialization
-    boundary: transport stays stringly like the reference, storage is typed)."""
-    cols = [
-        decode_image_value(F.col(image_col).getItem(f.name), f.dataType).alias(
-            f.name
-        )
-        for f in schema.fields
-    ]
-    return df.select(*cols)

@@ -139,39 +139,6 @@ def promote_tmp(tmp: str, path: str) -> None:
         os.rename(tmp, path)
 
 
-def swap_in_many(
-    dfs: dict[str, DataFrame],
-    path: str,
-    batch_id: int | None = None,
-    keep_stamp: bool = False,
-    run_id: str | None = None,
-) -> None:
-    """Atomically replace a MULTI-relation store: ``path`` holds one
-    parquet subdirectory per key of ``dfs`` (read back as
-    ``path/<name>``), and the whole set swaps in ONE rename — so a
-    consumer whose state spans several relations (e.g. the streaming
-    join view: fact side + dim side + view) can never crash into a
-    half-updated combination, which a per-relation swap_in could.
-    Stamp semantics identical to :func:`swap_in` (the stamp covers the
-    set)."""
-    stamp: dict | None = None
-    if batch_id is not None:
-        stamp = {"batch_id": batch_id}
-        if run_id is not None:
-            stamp["run_id"] = run_id
-    elif keep_stamp:
-        stamp = _read_stamp(path)
-    tmp = f"{path}.tmp-{uuidlib.uuid4().hex[:8]}"
-    for name, df in dfs.items():
-        # old relations stay live under `path` while these lazy plans
-        # (which read them) execute into the tmp dir
-        df.write.mode("overwrite").parquet(os.path.join(tmp, name))
-    if stamp is not None:
-        with open(os.path.join(tmp, _MARKER), "w") as f:
-            json.dump(stamp, f)
-    promote_tmp(tmp, path)
-
-
 def _siblings(path: str, kind: str) -> list[str]:
     d = os.path.dirname(path) or "."
     base = os.path.basename(path) + f".{kind}-"

@@ -57,29 +57,6 @@ def read_changelog_stream(
     )
 
 
-def stream_dedup(
-    changes: DataFrame,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Stateful dedup by (source, position) with bounded state: the
-    watermark ages out dedup state, so duplicate redelivery inside the
-    delay window is dropped exactly like the reference's GTID-covered
-    check (A17/A21)."""
-    # watermarks need TIMESTAMP (LTZ); session tz is pinned UTC so the
-    # cast is value-preserving
-    return (
-        changes.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark_delay)
-        .dropDuplicatesWithinWatermark(["data_source", "pos"])
-    )
-
-
-def filter_stream(changes: DataFrame, rules) -> DataFrame:
-    """A20: re-apply the (schema, table) rules per row event — compiled
-    Column, JVM-side."""
-    return changes.filter(rules.to_column(F.col("schema"), F.col("table")))
-
-
 class StreamingMaterializer:
     """foreachBatch MERGE of a changelog stream into a queryable table.
 
@@ -138,6 +115,21 @@ class StreamingMaterializer:
                 self._aliases = stored
         storeio.recover(state_path)
         if not os.path.exists(state_path):
+            # the MERGE keeps one row per key, so a declared key that
+            # is not unique in the snapshot would silently drop rows at
+            # the first batch; checked once, on first init only
+            dup = (
+                snapshot.groupBy(*keys)
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .filter(F.col("__n") > 1)
+                .first()
+            )
+            if dup is not None:
+                key = {k: dup[k] for k in keys}
+                raise ValueError(
+                    f"primary key {keys} is not unique in the snapshot of "
+                    f"{table or state_path!r}: {key} appears {dup['__n']} times"
+                )
             init = snapshot.withColumn(
                 POS_COL, F.lit(pos_threshold or "").cast("string")
             ).withColumn(OP_COL, F.lit("insert"))
@@ -397,88 +389,3 @@ class StreamingMaterializer:
             .trigger(availableNow=True)
             .start()
         )
-
-
-def stream_commit_join(
-    rows: DataFrame,
-    commits: DataFrame,
-    interval: str = "10 minutes",
-    watermark_delay: str = "30 minutes",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream interval join: enrich row events with their
-    transaction's commit event (the streaming form of A22's buffer-until-
-    XID — instead of holding rows in explicit state, the join's interval
-    bound holds them, and the watermark ages the buffer out).
-
-    Both sides carry a watermark and the join condition bounds commit
-    time to [row ts, row ts + interval], so Spark can discard state for
-    rows whose commit window has passed — state is O(events in flight
-    within the interval), not O(stream).
-
-    ``how="left_outer"`` turns it into an uncommitted-transaction
-    detector: a row whose commit never arrives is emitted with NULL
-    commit columns once the watermark passes its join window (rollback
-    surveillance — the reference drops such rows silently on restart,
-    internal/cannal/fullamount_service.go rollback path; here they
-    become observable)."""
-    r = (
-        rows.filter(F.col("op") != "commit")
-        .select(
-            F.col("txn_id"),
-            F.col("pos").alias("row_pos"),
-            F.col("ts").cast("timestamp").alias("row_ts"),
-            F.col("table").alias("row_table"),
-        )
-        .withWatermark("row_ts", watermark_delay)
-    )
-    c = (
-        commits.filter(F.col("op") == "commit")
-        .select(
-            F.col("txn_id").alias("c_txn_id"),
-            F.col("pos").alias("commit_pos"),
-            F.col("ts").cast("timestamp").alias("commit_ts"),
-        )
-        .withWatermark("commit_ts", watermark_delay)
-    )
-    return r.join(
-        c,
-        (F.col("txn_id") == F.col("c_txn_id"))
-        & (F.col("commit_ts") >= F.col("row_ts"))
-        & (F.col("commit_ts") <= F.col("row_ts") + F.expr(f"INTERVAL {interval}")),
-        how,
-    ).select("txn_id", "row_table", "row_pos", "row_ts", "commit_pos", "commit_ts")
-
-
-# -- streaming windowed aggregations (A18/A19's analytic consumers) -------
-
-
-def stream_tumbling_counts(
-    changes: DataFrame,
-    window_size: str = "1 hour",
-    watermark_delay: str = "30 minutes",
-) -> DataFrame:
-    """Tumbling event-time counts with late-data drop via watermark."""
-    return (
-        changes.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark_delay)
-        .groupBy(F.window("ts", window_size).alias("w"), "table", "op")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("wstart"), "table", "op", "n_events")
-    )
-
-
-def stream_session_counts(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark_delay: str = "30 minutes",
-    key: str = "user_id",
-) -> DataFrame:
-    """Session windows over a raw event stream (gap-merged)."""
-    return (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark_delay)
-        .groupBy(F.col(key), F.session_window("ts", gap).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(key, F.col("w.start").alias("session_start"), "n_events")
-    )

@@ -185,7 +185,7 @@ def test_envelope_demux_update_pairing_and_commit():
     assert all(e["data_source"] == "src1" for e in evs)
     assert [e["schema"] for e in evs[:3]] == ["bank"] * 3
     assert [e["table"] for e in evs[:3]] == ["accounts"] * 3
-    # pos = zero-padded log_pos: strictly increasing
+    # pos = (file sequence, log_pos), zero-padded: strictly increasing
     poss = [e["pos"] for e in evs]
     assert poss == sorted(poss) and len(set(poss)) == len(poss)
 
@@ -648,6 +648,58 @@ def test_engine_ingests_binlog_files_with_gtid_resume(spark, tmp_path):
     engine2 = Engine(load_config(cfgp), spark=spark)
     engine2.init_sources()
     assert engine2.ingest_binlogs() == {}
+
+
+def _region_update(w, gno, key, before, after):
+    w.gtid(SID, gno)
+    w.update_rows(9, [(
+        {"r_regionkey": key, "r_name": before},
+        {"r_regionkey": key, "r_name": after},
+    )])
+    w.xid(gno)
+
+
+def test_later_binlog_file_wins_over_higher_log_pos_in_earlier_file(spark, tmp_path):
+    """log_pos restarts in every binlog file: a key written late in
+    binlog.000001 (high log_pos) and early in binlog.000002 (low
+    log_pos) must end with the binlog.000002 image — pos orders by
+    (file, offset), the coordinate MySQL itself uses."""
+    from go_cdc_spark.app import Engine
+    from go_cdc_spark.config import load_config
+
+    cfgp = _binlog_engine_config(tmp_path)
+    first = _writer()
+    first.table_map(9, "main", "region", REGION_COLS, pk=[0])
+    for gno in range(1, 6):  # push the key's write to a high log_pos
+        _region_update(first, gno, 1, "AMERICA", "AMERICA")
+    _region_update(first, 6, 0, "AFRICA", "AFRICA-file1")
+    second = _writer()
+    second.table_map(9, "main", "region", REGION_COLS, pk=[0])
+    _region_update(second, 7, 0, "AFRICA-file1", "AFRICA-file2")
+    first.write(tmp_path / "binlogs" / "binlog.000001")
+    second.write(tmp_path / "binlogs" / "binlog.000002")
+
+    dec = BinlogEnvelopeDecoder("dev")
+    pos1 = [e["pos"] for e in dec.decode_file(str(tmp_path / "binlogs" / "binlog.000001"))]
+    pos2 = [e["pos"] for e in dec.decode_file(str(tmp_path / "binlogs" / "binlog.000002"))]
+    assert max(pos1) < min(pos2)
+
+    engine = Engine(load_config(cfgp), spark=spark)
+    engine.init_sources()
+    engine.full_sync()
+    engine.binlog_sync()
+    got = {r.r_regionkey: r.r_name
+           for r in engine.read_table(1, "main", "region").collect()}
+    assert got[0] == "AFRICA-file2"
+
+
+def test_binlog_file_without_sequence_number_is_refused(tmp_path):
+    w = _writer()
+    w.table_map(9, "main", "region", REGION_COLS, pk=[0])
+    _region_update(w, 1, 0, "AFRICA", "AFRICA-v2")
+    w.write(tmp_path / "binlog.index")
+    with pytest.raises(ValueError, match="numeric sequence"):
+        BinlogEnvelopeDecoder("dev").decode_file(str(tmp_path / "binlog.index"))
 
 
 def test_binlog_dir_config_validation(tmp_path):

@@ -95,131 +95,3 @@ def test_random_interleavings_match_recompute(spark):
             live.add(i)
             evs.append(("insert", pos, i, g, rng.randint(-20, 120)))
     _run(spark, rows, evs)
-
-
-# ---------------------------------------------------------------------------
-# Streaming twin
-# ---------------------------------------------------------------------------
-
-from pyspark.sql import types as T  # noqa: E402
-
-from go_cdc_spark.streaming.ivm import IncrementalHistogram  # noqa: E402
-
-from .test_ivm import _ev, _write_segments  # noqa: E402
-
-
-def _run_hist(spark, tmp_path, segments):
-    from go_cdc_spark.streaming.pipeline import read_changelog_stream
-
-    seg = tmp_path / "hs"
-    _write_segments(seg, segments)
-    h = IncrementalHistogram(
-        spark, ["grp"], "val", LO, HI, BINS, str(tmp_path / "h_state"),
-        types={"grp": T.StringType(), "val": T.DoubleType()},
-    )
-    h.start(
-        read_changelog_stream(spark, str(seg)), str(tmp_path / "ckpt_h")
-    ).awaitTermination(120)
-    return h
-
-
-def test_stream_histogram_folds_and_reads_percentiles(spark, tmp_path):
-    h = _run_hist(spark, tmp_path, [
-        [_ev("insert", 1, i, "a", float(v))
-         for i, v in enumerate([5, 15, 25, 35, 45, 55, 65, 75, 85, 95], 1)],
-        [_ev("delete", 11, 10, before=("a", 95.0)),   # retract the top
-         _ev("update", 12, 1, "a", 99.0, before=("a", 5.0))],
-    ])
-    hist = {(r.grp, r.bin): r.n for r in h.histogram().collect()}
-    # after: values 15..85 (bins 1..8) + 99 (bin 9)
-    assert hist == {("a", b): 1 for b in range(1, 10)}
-    row = h.read_table().collect()[0]
-    assert (row.grp, row.n_vals, row.p50_bin, row.p90_bin, row.p99_bin) == (
-        "a", 9, 5, 9, 9,
-    )
-
-
-def test_stream_histogram_replay_is_noop(spark, tmp_path):
-    from go_cdc_spark.sources.changelog import changelog_df
-
-    h = IncrementalHistogram(
-        spark, ["grp"], "val", LO, HI, BINS, str(tmp_path / "h_state"),
-        types={"grp": T.StringType(), "val": T.DoubleType()},
-    )
-
-    def b(events):
-        rows = []
-        for e in events:
-            e = dict(e)
-            e["ts"] = None
-            rows.append(e)
-        return changelog_df(spark, rows)
-
-    b0 = b([_ev("insert", 1, 1, "a", 10.0), _ev("insert", 2, 2, "a", 90.0)])
-    b1 = b([_ev("delete", 3, 1, before=("a", 10.0))])
-    h.process_batch(b0, 0)
-    h.process_batch(b1, 1)
-    clean = sorted(map(tuple, h.histogram().collect()))
-    h.process_batch(b1, 1)  # replay
-    h.process_batch(b0, 0)  # stale replay
-    assert sorted(map(tuple, h.histogram().collect())) == clean == [("a", 9, 1)]
-
-
-def test_stream_histogram_delete_before_insert_commutes(spark, tmp_path):
-    from go_cdc_spark.sources.changelog import changelog_df
-
-    h = IncrementalHistogram(
-        spark, ["grp"], "val", LO, HI, BINS, str(tmp_path / "h_state"),
-        types={"grp": T.StringType(), "val": T.DoubleType()},
-    )
-
-    def b(events):
-        rows = []
-        for e in events:
-            e = dict(e)
-            e["ts"] = None
-            rows.append(e)
-        return changelog_df(spark, rows)
-
-    # the delete's batch arrives BEFORE the insert's: the cell parks
-    # negative (hidden from reads) until the insert lands
-    h.process_batch(b([_ev("delete", 2, 1, before=("a", 50.0))]), 0)
-    assert h.histogram().count() == 0
-    h.process_batch(b([_ev("insert", 1, 1, "a", 50.0)]), 1)
-    assert sorted(map(tuple, h.histogram().collect())) == []  # net zero, compacted
-    h.process_batch(b([_ev("insert", 3, 2, "a", 50.0)]), 2)
-    assert sorted(map(tuple, h.histogram().collect())) == [("a", 5, 1)]
-
-
-def test_stream_histogram_staleness_flag(spark, tmp_path):
-    """A retraction arriving BEFORE its insert parks a negative cell;
-    while it is parked the group's visible totals overstate the merged
-    count — read_table must say so (has_negative), the histogram twin
-    of top-k's dirty column."""
-    from go_cdc_spark.sources.changelog import changelog_df
-
-    h = IncrementalHistogram(
-        spark, ["grp"], "val", LO, HI, BINS, str(tmp_path / "h_state"),
-        types={"grp": T.StringType(), "val": T.DoubleType()},
-    )
-
-    def b(events):
-        rows = []
-        for e in events:
-            e = dict(e)
-            e["ts"] = None
-            rows.append(e)
-        return changelog_df(spark, rows)
-
-    # delete of id 2 arrives a batch before its insert (cross-segment
-    # reordering): bin(35) parks at n=-1 while bin(15) reads n=1
-    h.process_batch(
-        b([_ev("insert", 1, 1, "a", 15.0), _ev("delete", 2, 2, before=("a", 35.0))]),
-        0,
-    )
-    row = h.read_table().collect()[0]
-    assert row.has_negative and row.n_vals == 1
-    # the late insert lands: the negative annihilates, flag clears
-    h.process_batch(b([_ev("insert", 3, 2, "a", 35.0)]), 1)
-    row = h.read_table().collect()[0]
-    assert not row.has_negative and row.n_vals == 1

@@ -1,12 +1,11 @@
-"""Incremental view maintenance: the aggregate folded from the change
-stream must equal the aggregate recomputed from the materialized rows —
-for every interleaving of inserts, group-moving updates, and deletes,
-across micro-batch boundaries."""
+"""Incremental view maintenance: every batch ``incremental_*`` operator
+must equal the aggregate recomputed from the ``apply_changes`` MERGE
+output — for every interleaving of inserts, group-moving updates, and
+deletes — and the streaming fold (``IncrementalGrid``) must survive torn
+swaps and replays through its run-scoped batch stamp."""
 
 from __future__ import annotations
 
-import json
-import os
 import random
 
 from pyspark.sql import Row
@@ -14,16 +13,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from go_cdc_spark.sources.changelog import format_pos
-from go_cdc_spark.streaming.ivm import IncrementalAggregate
-from go_cdc_spark.streaming.pipeline import StreamingMaterializer, read_changelog_stream
-
-SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("grp", T.StringType()),
-        T.StructField("val", T.DoubleType()),
-    ]
-)
 
 
 def _ev(op, pos, id_, grp=None, val=None, before=None):
@@ -44,200 +33,8 @@ def _ev(op, pos, id_, grp=None, val=None, before=None):
     return e
 
 
-def _write_segments(seg_dir, segments):
-    seg_dir.mkdir(parents=True, exist_ok=True)
-    for i, events in enumerate(segments):
-        p = seg_dir / f"s{i}.json"
-        with open(p, "w") as f:
-            for e in events:
-                f.write(json.dumps(e) + "\n")
-        # the file source orders batches by modification time; same-ms
-        # writes tie and can process segments out of order (harmless for
-        # the commutative SUM/COUNT tests, but min/max dirty-tracking is
-        # deliberately order-SENSITIVE for deletes) — pin distinct mtimes
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
-
-
-def _run_both(spark, tmp_path, segments):
-    seg = tmp_path / "seg"
-    _write_segments(seg, segments)
-    snap = spark.createDataFrame([], SCHEMA)
-    mat = StreamingMaterializer(
-        spark, snap, keys=["id"], state_path=str(tmp_path / "rows"), table="t"
-    )
-    ivm = IncrementalAggregate(
-        spark,
-        group_cols=["grp"],
-        value_col="val",
-        state_path=str(tmp_path / "agg"),
-        types={"grp": T.StringType()},
-    )
-    q1 = mat.start(read_changelog_stream(spark, str(seg)), str(tmp_path / "ck1"))
-    q1.awaitTermination(120)
-    q2 = ivm.start(read_changelog_stream(spark, str(seg)), str(tmp_path / "ck2"))
-    q2.awaitTermination(120)
-    return mat, ivm
-
-
-def _assert_matches(mat, ivm):
-    truth = {
-        r.grp: (r.n, round(r.s, 6))
-        for r in mat.read_table()
-        .groupBy("grp")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("val").cast("decimal(38,6)")).cast("double").alias("s"),
-        )
-        .collect()
-    }
-    got = {r.grp: (r.n_rows, round(r.sum_val, 6)) for r in ivm.read_table().collect()}
-    assert got == truth
-
-
-def test_ivm_insert_update_delete_and_group_move(spark, tmp_path):
-    segments = [
-        [
-            _ev("insert", 110, 1, "a", 10.5),
-            _ev("insert", 120, 2, "a", 2.25),
-            _ev("insert", 130, 3, "b", 7.0),
-        ],
-        [
-            # value change within a group
-            _ev("update", 140, 2, "a", 4.75, before=("a", 2.25)),
-            # group MOVE: a → b (must decrement a, increment b)
-            _ev("update", 150, 1, "b", 10.5, before=("a", 10.5)),
-            _ev("delete", 160, 3, before=("b", 7.0)),
-            _ev("insert", 170, 4, "c", 1.0),
-        ],
-        [
-            # empty out group c entirely → group must disappear
-            _ev("delete", 180, 4, before=("c", 1.0)),
-        ],
-    ]
-    mat, ivm = _run_both(spark, tmp_path, segments)
-    _assert_matches(mat, ivm)
-    assert "c" not in {r.grp for r in ivm.read_table().collect()}
-
-
-def test_ivm_random_interleaving_matches_recompute(spark, tmp_path):
-    rng = random.Random(42)
-    live = {}  # id -> (grp, val)
-    pos = 100
-    segments, current = [], []
-    next_id = 0
-    for _ in range(60):
-        pos += 1
-        roll = rng.random()
-        if roll < 0.5 or not live:
-            next_id += 1
-            grp = rng.choice("abcd")
-            val = round(rng.uniform(-50, 50), 3)
-            live[next_id] = (grp, val)
-            current.append(_ev("insert", pos, next_id, grp, val))
-        elif roll < 0.8:
-            id_ = rng.choice(list(live))
-            old = live[id_]
-            grp = rng.choice("abcd")
-            val = round(rng.uniform(-50, 50), 3)
-            live[id_] = (grp, val)
-            current.append(_ev("update", pos, id_, grp, val, before=old))
-        else:
-            id_ = rng.choice(list(live))
-            current.append(_ev("delete", pos, id_, before=live.pop(id_)))
-        if len(current) >= 12:
-            segments.append(current)
-            current = []
-    if current:
-        segments.append(current)
-    mat, ivm = _run_both(spark, tmp_path, segments)
-    _assert_matches(mat, ivm)
-
-
-def test_ivm_out_of_order_batches_commute(spark, tmp_path):
-    """Cross-batch reordering must not change the final aggregate: a
-    delete applied BEFORE its insert parks the group at a negative
-    in-state count (hidden from reads) until the insert lands. This is
-    exactly what the file source can do to segment order."""
-    from go_cdc_spark.sources.changelog import changelog_df
-
-    def ev_no_ts(*a, **k):
-        e = _ev(*a, **k)
-        e["ts"] = None
-        return e
-
-    segments = [
-        [ev_no_ts("insert", 110, 1, "a", 10.5), ev_no_ts("insert", 120, 2, "b", 3.0)],
-        [ev_no_ts("update", 130, 1, "b", 11.0, before=("a", 10.5))],
-        [ev_no_ts("delete", 140, 2, before=("b", 3.0))],
-    ]
-
-    def run(order, path):
-        ivm = IncrementalAggregate(
-            spark, ["grp"], "val", str(path), types={"grp": T.StringType()}
-        )
-        for i, events in enumerate(order):
-            ivm.process_batch(changelog_df(spark, events), i)
-        return sorted(
-            (r.grp, r.n_rows, r.sum_val) for r in ivm.read_table().collect()
-        )
-
-    fwd = run(segments, tmp_path / "fwd")
-    rev = run(list(reversed(segments)), tmp_path / "rev")
-    assert fwd == rev == [("b", 1, 11.0)]
-
-
-def _run_minmax(spark, tmp_path, segments):
-    from go_cdc_spark.streaming.ivm import IncrementalMinMax
-
-    seg = tmp_path / "cl"
-    _write_segments(seg, segments)
-    mm = IncrementalMinMax(
-        spark, ["grp"], "val", str(tmp_path / "mm_state"),
-        types={"grp": T.StringType(), "val": T.DoubleType()},
-    )
-    mm.start(
-        read_changelog_stream(spark, str(seg)), str(tmp_path / "ckpt_mm")
-    ).awaitTermination(120)
-    return mm
-
-
-def test_minmax_inserts_fold_clean(spark, tmp_path):
-    mm = _run_minmax(spark, tmp_path, [
-        [_ev("insert", 1, 1, "a", 5.0), _ev("insert", 2, 2, "a", 9.0)],
-        [_ev("insert", 3, 3, "a", 1.0), _ev("insert", 4, 4, "b", 7.0)],
-    ])
-    got = {r["grp"]: (r["min_val"], r["max_val"], r["dirty"]) for r in mm.read_table().collect()}
-    assert got == {"a": (1.0, 9.0, False), "b": (7.0, 7.0, False)}
-
-
-def test_minmax_interior_delete_stays_clean(spark, tmp_path):
-    mm = _run_minmax(spark, tmp_path, [
-        [_ev("insert", 1, 1, "a", 1.0), _ev("insert", 2, 2, "a", 5.0),
-         _ev("insert", 3, 3, "a", 9.0)],
-        [_ev("delete", 4, 2, before=("a", 5.0))],  # strictly inside (1, 9)
-    ])
-    got = {r["grp"]: (r["min_val"], r["max_val"], r["dirty"]) for r in mm.read_table().collect()}
-    assert got == {"a": (1.0, 9.0, False)}
-
-
-def test_minmax_extreme_delete_dirties_then_repair(spark, tmp_path):
-    mm = _run_minmax(spark, tmp_path, [
-        [_ev("insert", 1, 1, "a", 1.0), _ev("insert", 2, 2, "a", 5.0),
-         _ev("insert", 3, 3, "a", 9.0)],
-        [_ev("delete", 4, 3, before=("a", 9.0))],  # removes the max
-    ])
-    row = mm.read_table().collect()[0]
-    assert row["dirty"] is True  # runner-up unknowable from deltas
-    base = spark.createDataFrame(
-        [Row(id=1, grp="a", val=1.0), Row(id=2, grp="a", val=5.0)], SCHEMA
-    )
-    assert mm.repair(base) == 1
-    row = mm.read_table().collect()[0]
-    assert (row["min_val"], row["max_val"], row["dirty"]) == (1.0, 5.0, False)
-
-
 # ---------------------------------------------------------------------------
-# Batch twin (operators/cdc.py::incremental_agg): minimal-image IVM — the
+# Batch IVM (operators/cdc.py::incremental_agg), minimal-image: the
 # before-image is looked up from the base table by key instead of carried
 # on the event. Ground truth: aggregate the apply_changes MERGE output.
 # ---------------------------------------------------------------------------
@@ -514,69 +311,6 @@ def test_batch_ivm_composite_keys(spark):
     }
     # group "a" vanishes: (1,1) deleted, (1,2) migrated to "c"
     assert got == want == {"b": (2, 35.0), "c": (1, 21.0)}
-
-
-def test_sum_replay_of_committed_batch_is_noop(spark, tmp_path):
-    """Crash between state swap and checkpoint commit → Structured
-    Streaming replays the batch. Deltas are non-idempotent, so the
-    state's atomic batch-id stamp must absorb the replay."""
-    from go_cdc_spark.sources.changelog import changelog_df
-    from go_cdc_spark.streaming.ivm import IncrementalAggregate
-
-    def ev(*a, **k):
-        e = _ev(*a, **k)
-        e["ts"] = None  # changelog_df takes typed rows, not JSON strings
-        return e
-
-    ivm = IncrementalAggregate(
-        spark, ["grp"], "val", str(tmp_path / "s"), types={"grp": T.StringType()}
-    )
-    b0 = changelog_df(spark, [ev("insert", 1, 1, "a", 10.0)])
-    b1 = changelog_df(
-        spark,
-        [ev("insert", 2, 2, "a", 5.0), ev("delete", 3, 1, before=("a", 10.0))],
-    )
-    ivm.process_batch(b0, 0)
-    ivm.process_batch(b1, 1)
-    clean = sorted((r.grp, r.n_rows, r.sum_val) for r in ivm.read_table().collect())
-    ivm.process_batch(b1, 1)  # the replay
-    ivm.process_batch(b0, 0)  # stale replay of an even older batch
-    assert sorted((r.grp, r.n_rows, r.sum_val) for r in ivm.read_table().collect()) == clean
-    ivm.process_batch(changelog_df(spark, [ev("insert", 4, 4, "b", 1.0)]), 2)
-    got = sorted((r.grp, r.n_rows, r.sum_val) for r in ivm.read_table().collect())
-    assert got == [("a", 1, 5.0), ("b", 1, 1.0)]
-
-
-def test_minmax_replay_and_repair_keep_stamp(spark, tmp_path):
-    """Same replay guard for min/max — including that a repair() between
-    crash and replay carries the batch stamp forward."""
-    from pyspark.sql import Row
-
-    from go_cdc_spark.sources.changelog import changelog_df
-    from go_cdc_spark.streaming.ivm import IncrementalMinMax
-
-    def ev(*a, **k):
-        e = _ev(*a, **k)
-        e["ts"] = None
-        return e
-
-    mm = IncrementalMinMax(
-        spark, ["grp"], "val", str(tmp_path / "m"),
-        types={"grp": T.StringType(), "val": T.DoubleType()},
-    )
-    b0 = changelog_df(
-        spark, [ev("insert", 1, 1, "a", 5.0), ev("insert", 2, 2, "a", 9.0)]
-    )
-    b1 = changelog_df(spark, [ev("delete", 3, 2, before=("a", 9.0))])  # dirties
-    mm.process_batch(b0, 0)
-    mm.process_batch(b1, 1)
-    base = spark.createDataFrame([Row(id=1, grp="a", val=5.0)], SCHEMA)
-    assert mm.repair(base) == 1
-    clean = sorted(map(tuple, mm.read_table().collect()))
-    mm.process_batch(b1, 1)  # replay after repair: must be skipped
-    assert sorted(map(tuple, mm.read_table().collect())) == clean
-    row = mm.read_table().collect()[0]
-    assert (row["min_val"], row["max_val"], row["dirty"]) == (5.0, 5.0, False)
 
 
 def test_batch_minmax_null_values_follow_group_by_semantics(spark):
@@ -904,117 +638,26 @@ def test_batch_distinct_rejects_colliding_group_cols(spark):
 
 
 # ---------------------------------------------------------------------------
-# Streaming COUNT(DISTINCT) IVM (IncrementalDistinct): support counts in
-# state, derived distinct counts, commutation + replay guarantees.
+# Streaming fold (IncrementalGrid): torn-swap recovery and the run-scoped
+# replay stamp.
 # ---------------------------------------------------------------------------
 
 
-def _run_distinct(spark, tmp_path, segments):
-    from go_cdc_spark.streaming.ivm import IncrementalDistinct
-
-    seg = tmp_path / "dseg"
-    _write_segments(seg, segments)
-    dv = IncrementalDistinct(
-        spark, ["grp"], "val", str(tmp_path / "dist_state"),
-        types={"grp": T.StringType(), "val": T.DoubleType()},
-    )
-    dv.start(
-        read_changelog_stream(spark, str(seg)), str(tmp_path / "ckpt_d")
-    ).awaitTermination(120)
-    return dv
-
-
-def test_distinct_support_counts_across_batches(spark, tmp_path):
-    """Two holders of the same value in different batches: deleting one
-    keeps the distinct count, deleting the last drops it."""
-    dv = _run_distinct(spark, tmp_path, [
-        [_ev("insert", 1, 1, "a", 5.0), _ev("insert", 2, 2, "a", 5.0),
-         _ev("insert", 3, 3, "a", 9.0)],
-        [_ev("delete", 4, 1, before=("a", 5.0))],   # support 2→1: no change
-        [_ev("delete", 5, 3, before=("a", 9.0))],   # last 9.0 gone: −1
-    ])
-    got = {r["grp"]: (r["n_distinct"], r["n_rows"]) for r in dv.read_table().collect()}
-    assert got == {"a": (1, 1)}
-
-
-def test_distinct_value_change_and_group_move(spark, tmp_path):
-    dv = _run_distinct(spark, tmp_path, [
-        [_ev("insert", 1, 1, "a", 5.0), _ev("insert", 2, 2, "b", 5.0)],
-        # value change within a AND a→b migration in one update stream
-        [_ev("update", 3, 1, "b", 7.0, before=("a", 5.0))],
-    ])
-    got = {r["grp"]: (r["n_distinct"], r["n_rows"]) for r in dv.read_table().collect()}
-    assert got == {"b": (2, 2)}  # a vanished; b = {5.0, 7.0}
-
-
-def test_distinct_out_of_order_batches_commute(spark, tmp_path):
-    """Delete-before-insert parks the pair at negative support (hidden
-    from reads) until the insert lands — same commutation contract as
-    the SUM/COUNT fold."""
+def _grid_batch(spark):
+    """One insert event for the grid fold."""
     from go_cdc_spark.sources.changelog import changelog_df
-    from go_cdc_spark.streaming.ivm import IncrementalDistinct
 
-    def ev_no_ts(*a, **k):
-        e = _ev(*a, **k)
-        e["ts"] = None
-        return e
-
-    segments = [
-        [ev_no_ts("insert", 110, 1, "a", 5.0), ev_no_ts("insert", 120, 2, "a", 9.0)],
-        [ev_no_ts("update", 130, 1, "a", 6.0, before=("a", 5.0))],
-        [ev_no_ts("delete", 140, 2, before=("a", 9.0))],
-    ]
-
-    def run(order, path):
-        dv = IncrementalDistinct(
-            spark, ["grp"], "val", str(path),
-            types={"grp": T.StringType(), "val": T.DoubleType()},
-        )
-        for i, events in enumerate(order):
-            dv.process_batch(changelog_df(spark, events), i)
-        return sorted(
-            (r.grp, r.n_distinct, r.n_rows) for r in dv.read_table().collect()
-        )
-
-    fwd = run(segments, tmp_path / "dfwd")
-    rev = run(list(reversed(segments)), tmp_path / "drev")
-    assert fwd == rev == [("a", 1, 1)]
+    data = {"event_id": "1", "event_type": "click", "ts": "2024-03-01 00:10:00",
+            "value": "10.0"}
+    return changelog_df(spark, [{
+        "data_source": "ds1", "schema": "main", "table": "events", "op": "insert",
+        "data": data, "before": None, "ts": None, "pos": format_pos(1),
+        "txn_id": None,
+    }])
 
 
-def test_distinct_replay_of_committed_batch_is_noop(spark, tmp_path):
-    """Crash between state write and checkpoint commit → foreachBatch
-    replays the batch; the stamp must make the re-fold a no-op (support
-    deltas are not idempotent)."""
-    from go_cdc_spark.sources.changelog import changelog_df
-    from go_cdc_spark.streaming.ivm import IncrementalDistinct
-
-    def ev_no_ts(*a, **k):
-        e = _ev(*a, **k)
-        e["ts"] = None
-        return e
-
-    dv = IncrementalDistinct(
-        spark, ["grp"], "val", str(tmp_path / "drep"),
-        types={"grp": T.StringType(), "val": T.DoubleType()},
-    )
-    b0 = changelog_df(spark, [ev_no_ts("insert", 1, 1, "a", 5.0)])
-    b1 = changelog_df(spark, [ev_no_ts("insert", 2, 2, "a", 5.0),
-                              ev_no_ts("insert", 3, 3, "a", 9.0)])
-    dv.process_batch(b0, 0)
-    dv.process_batch(b1, 1)
-    clean = sorted(map(tuple, dv.read_table().collect()))
-    dv.process_batch(b1, 1)  # replay: must be skipped
-    assert sorted(map(tuple, dv.read_table().collect())) == clean
-    assert clean == [("a", 2, 3)]
-
-
-def test_distinct_null_values_counted_by_rows_only(spark, tmp_path):
-    dv = _run_distinct(spark, tmp_path, [
-        [{**_ev("insert", 1, 1, "a", 0.0), "data": {"id": "1", "grp": "a", "val": None}},
-         _ev("insert", 2, 2, "a", 5.0)],
-    ])
-    got = {r["grp"]: (r["n_distinct"], r["n_rows"]) for r in dv.read_table().collect()}
-    assert got == {"a": (1, 2)}  # NULL invisible to distinct, counted by n
+def _grid_rows(grid):
+    return sorted(tuple(r) for r in grid.read_table().collect())
 
 
 def test_storeio_stamp_run_id_scoping(spark, tmp_path):
@@ -1042,39 +685,27 @@ def test_storeio_stamp_run_id_scoping(spark, tmp_path):
 
 def test_consumer_init_recovers_torn_swap(spark, tmp_path):
     """A crash between swap_in's two renames leaves the state only at
-    the .old- sibling. Every IVM consumer must promote it back at
-    construction (storeio.recover) — otherwise _state() returns None on
-    restart and the replayed batch folds into EMPTY state: silent total
-    state loss."""
+    the .old- sibling. The fold must promote it back at construction
+    (storeio.recover) — otherwise _state() returns None on restart and
+    the replayed batch folds into EMPTY state: silent total state
+    loss."""
     import os
 
-    from go_cdc_spark.sources.changelog import changelog_df
-    from go_cdc_spark.streaming.ivm import IncrementalAggregate
-
-    def ev(*a, **k):
-        e = _ev(*a, **k)
-        e["ts"] = None
-        return e
+    from go_cdc_spark.streaming.ivm import IncrementalGrid
 
     path = str(tmp_path / "s")
-    ivm = IncrementalAggregate(spark, ["grp"], "val", path, types={"grp": T.StringType()})
-    ivm.process_batch(changelog_df(spark, [ev("insert", 1, 1, "a", 10.0)]), 0)
-    want = sorted((r.grp, r.n_rows, r.sum_val) for r in ivm.read_table().collect())
+    ivm = IncrementalGrid(spark, path)
+    ivm.process_batch(_grid_batch(spark), 0)
+    want = _grid_rows(ivm)
     # simulate the torn swap: live dir demoted, promotion rename lost
     os.rename(path, path + ".old-deadbeef")
-    restarted = IncrementalAggregate(
-        spark, ["grp"], "val", path, types={"grp": T.StringType()}
-    )
-    assert sorted(
-        (r.grp, r.n_rows, r.sum_val) for r in restarted.read_table().collect()
-    ) == want
+    restarted = IncrementalGrid(spark, path)
+    assert _grid_rows(restarted) == want
     # same checkpoint identity on restart → the recovered stamp still
     # absorbs the replay of the in-flight batch
     restarted._run_id = ivm._run_id
-    restarted.process_batch(changelog_df(spark, [ev("insert", 1, 1, "a", 10.0)]), 0)
-    assert sorted(
-        (r.grp, r.n_rows, r.sum_val) for r in restarted.read_table().collect()
-    ) == want
+    restarted.process_batch(_grid_batch(spark), 0)
+    assert _grid_rows(restarted) == want
 
 
 def test_stamp_always_carries_run_id(spark, tmp_path):
@@ -1086,17 +717,11 @@ def test_stamp_always_carries_run_id(spark, tmp_path):
     import os
 
     from go_cdc_spark import storeio
-    from go_cdc_spark.sources.changelog import changelog_df
-    from go_cdc_spark.streaming.ivm import IncrementalAggregate
-
-    def ev(*a, **k):
-        e = _ev(*a, **k)
-        e["ts"] = None
-        return e
+    from go_cdc_spark.streaming.ivm import IncrementalGrid
 
     path = str(tmp_path / "s")
-    ivm = IncrementalAggregate(spark, ["grp"], "val", path, types={"grp": T.StringType()})
-    ivm.process_batch(changelog_df(spark, [ev("insert", 1, 1, "a", 10.0)]), 5)
+    ivm = IncrementalGrid(spark, path)
+    ivm.process_batch(_grid_batch(spark), 5)
     with open(os.path.join(path, "_applied_batch.json")) as f:
         stamp = json.load(f)
     assert stamp["batch_id"] == 5 and stamp.get("run_id")  # never unscoped

@@ -1,6 +1,5 @@
 """incremental_mode (the 9th IVM algebra): maintained (group, value)
-counts + top-1 read must equal the recompute from the merged table,
-batch and streaming."""
+counts + top-1 read must equal the recompute from the merged table."""
 
 from __future__ import annotations
 
@@ -8,16 +7,12 @@ import random
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from go_cdc_spark.operators.cdc import (
     apply_changes,
     incremental_mode,
     mode_read,
 )
-from go_cdc_spark.streaming.ivm import IncrementalMode
-
-from .test_ivm import _ev, _write_segments
 
 
 def _snap(spark, rows):
@@ -86,63 +81,3 @@ def test_random_interleavings_match_recompute(spark):
             op = "update" if i in live else "insert"
             evs.append((op, pos, i, g, rng.choice(vals)))
     _run(spark, rows, evs)
-
-
-# ---------------------------------------------------------------------------
-# Streaming twin
-# ---------------------------------------------------------------------------
-
-
-def _run_mode(spark, tmp_path, segments):
-    from go_cdc_spark.streaming.pipeline import read_changelog_stream
-
-    seg = tmp_path / "ms"
-    _write_segments(seg, segments)
-    m = IncrementalMode(
-        spark, ["grp"], "val", str(tmp_path / "m_state"),
-        types={"grp": T.StringType(), "val": T.StringType()},
-    )
-    m.start(
-        read_changelog_stream(spark, str(seg)), str(tmp_path / "ckpt_m")
-    ).awaitTermination(120)
-    return m
-
-
-def test_stream_mode_folds_and_reads(spark, tmp_path):
-    m = _run_mode(spark, tmp_path, [
-        [_ev("insert", 1, 1, "a", "x"),
-         _ev("insert", 2, 2, "a", "x"),
-         _ev("insert", 3, 3, "a", "y")],
-        [_ev("update", 11, 2, "a", "y", before=("a", "x")),  # x:1 y:2
-         _ev("insert", 12, 4, "b", "z")],
-    ])
-    got = {r.grp: (r.mode_value, r.mode_count, r.has_negative)
-           for r in m.read_table().collect()}
-    assert got == {"a": ("y", 2, False), "b": ("z", 1, False)}
-
-
-def test_stream_mode_delete_before_insert_parks_negative(spark, tmp_path):
-    from go_cdc_spark.sources.changelog import changelog_df
-
-    m = IncrementalMode(
-        spark, ["grp"], "val", str(tmp_path / "m_state"),
-        types={"grp": T.StringType(), "val": T.StringType()},
-    )
-
-    def b(events):
-        rows = []
-        for e in events:
-            e = dict(e)
-            e["ts"] = None
-            rows.append(e)
-        return changelog_df(spark, rows)
-
-    m.process_batch(b([_ev("insert", 1, 1, "a", "x"),
-                       _ev("delete", 2, 2, before=("a", "y"))]), 0)
-    row = m.read_table().collect()[0]
-    assert (row.mode_value, row.mode_count) == ("x", 1)
-    assert row.has_negative  # the parked y:-1 is flagged, not shown
-    m.process_batch(b([_ev("insert", 3, 2, "a", "y")]), 1)
-    row = m.read_table().collect()[0]
-    assert (row.mode_value, row.mode_count) == ("x", 1)
-    assert not row.has_negative  # y net zero, compacted away

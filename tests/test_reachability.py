@@ -1,8 +1,10 @@
 """Every module under ``go_cdc_spark/`` must be reachable from an entry
-point by a static import walk — a module that only tests import is a
-second implementation nobody runs. No Spark: the walk parses source
-with ``ast`` and follows every ``import`` / ``from … import`` it finds,
-including the lazy ones inside function bodies."""
+point by a static import walk, and every top-level ``def``/``class`` in
+it must be referenced by package code — a module or function that only
+tests reach is a second implementation nobody runs. No Spark: both
+checks parse source with ``ast``; the walk follows every ``import`` /
+``from … import`` it finds, including the lazy ones inside function
+bodies."""
 
 from __future__ import annotations
 
@@ -90,3 +92,101 @@ def test_allowlist_is_not_stale():
     for path in ALLOWED_UNREACHED:
         assert (ROOT / path).is_file(), f"{path} no longer exists"
         assert path not in reached, f"{path} is reached now; drop it from the allowlist"
+
+
+# Top-level names no package code references, each with its reason.
+ALLOWED_UNREFERENCED = {
+    # test fixture builders for change events and positions
+    ("go_cdc_spark.sources.changelog", "changelog_df"): "test fixture builder",
+    ("go_cdc_spark.sources.changelog", "format_pos"): "test fixture builder",
+    # the batch envelope→table MERGE the golden and integration tests
+    # check the snapshot/changelog round trip against
+    ("go_cdc_spark.operators.cdc", "materialize_changelog"): "batch reference path",
+    # the Z-order writer and its file-skipping probe; the layout queries
+    # use with_zcell, tests/test_layout_io measures skipping with these
+    ("go_cdc_spark.operators.layout", "write_clustered"): "layout measurement",
+    ("go_cdc_spark.operators.layout", "run_with_scan_metrics"): "layout measurement",
+    # operator-run retention; Engine.safe_purge_pos gives its bound
+    ("go_cdc_spark.sources.retention", "purge_changelog"): "operator-run retention",
+    # the one-shot call of the SQL entry point
+    ("go_cdc_spark.sql", "run_sql"): "public API of sql.py",
+    # ROADMAP direction 4 wires these into Engine.incremental_sync
+    ("go_cdc_spark.streaming.metrics", "observe_changes"): "not yet wired",
+    ("go_cdc_spark.streaming.metrics", "install_tap"): "not yet wired",
+}
+
+
+def _resolve(path: Path, node: ast.ImportFrom) -> str:
+    here = _dotted(path).split(".")
+    package = here if path.name == "__init__.py" else here[:-1]
+    if node.level:
+        base = package[: len(package) - (node.level - 1)]
+        return ".".join(base + ([node.module] if node.module else []))
+    return node.module or ""
+
+
+def _is_query(node: ast.AST) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+        for d in getattr(node, "decorator_list", [])
+    )
+
+
+def _definitions_and_references():
+    """(module, name) of every top-level def/class that is not a
+    registered @query, and the set of (module, name) pairs package code
+    refers to: a bare name in its own module (outside the definition
+    itself), an imported name, or ``module.name`` through a package
+    module bound by an import. Strings and docstrings do not count."""
+    files = sorted((ROOT / PKG).rglob("*.py"))
+    modules = {_dotted(f) for f in files}
+    defs: set[tuple[str, str]] = set()
+    refs: set[tuple[str, str]] = set()
+    for path in files:
+        mod = _dotted(path)
+        tree = ast.parse(path.read_text(), filename=str(path))
+        bound: dict[str, str] = {}  # local name -> package module
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                src = _resolve(path, node)
+                for a in node.names:
+                    refs.add((src, a.name))
+                    if f"{src}.{a.name}" in modules:
+                        bound[a.asname or a.name] = f"{src}.{a.name}"
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name in modules:
+                        bound[a.asname or a.name] = a.name
+        for top in tree.body:
+            own = None
+            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                own = top.name
+                if not _is_query(top):
+                    defs.add((mod, own))
+            for n in ast.walk(top):
+                if isinstance(n, ast.Name) and n.id != own:
+                    refs.add((mod, n.id))
+                elif isinstance(n, ast.Attribute):
+                    parts, base = [], n.value
+                    while isinstance(base, ast.Attribute):
+                        parts.append(base.attr)
+                        base = base.value
+                    if isinstance(base, ast.Name):
+                        head = bound.get(base.id, base.id)
+                        target = ".".join([head, *reversed(parts)])
+                        if target in modules:
+                            refs.add((target, n.attr))
+    return defs, refs
+
+
+def test_every_top_level_name_is_referenced():
+    defs, refs = _definitions_and_references()
+    unreferenced = sorted(defs - refs - set(ALLOWED_UNREFERENCED))
+    assert unreferenced == [], f"top-level names no package code uses: {unreferenced}"
+
+
+def test_name_allowlist_is_not_stale():
+    defs, refs = _definitions_and_references()
+    for key in ALLOWED_UNREFERENCED:
+        assert key in defs, f"{key} no longer exists"
+        assert key not in refs, f"{key} is referenced now; drop it from the allowlist"

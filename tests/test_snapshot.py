@@ -183,7 +183,7 @@ def test_binary_column_roundtrip_through_materialize(spark):
     materialization has to unbase64, not string→binary cast (which would
     yield the UTF-8 bytes of the base64 text)."""
     from go_cdc_spark.operators.cdc import materialize_changelog
-    from go_cdc_spark.sources.changelog import DATA_OPS, typed_image
+    from go_cdc_spark.sources.changelog import DATA_OPS, decode_image_value
     from go_cdc_spark.sources.snapshot import snapshot_events
 
     payload = b"\x00\xff\x10ABC\x80"
@@ -192,7 +192,10 @@ def test_binary_column_roundtrip_through_materialize(spark):
     rows = events.filter(F.col("op").isin(list(DATA_OPS)))
 
     # direct image decode
-    img = typed_image(rows, "data", df.schema).collect()
+    blob = F.col("data").getItem("blob")
+    img = rows.select(
+        decode_image_value(blob, df.schema["blob"].dataType).alias("blob")
+    ).collect()
     assert bytes(img[0].blob) == payload
 
     # full merge path against an empty snapshot

@@ -1,8 +1,6 @@
 """incremental_stats: maintained per-group power sums (n, n_vals, Σv,
 Σv²) must equal the recompute from the merged table BIT-FOR-BIT — the
-decimal accumulation is what makes signed retraction exact — and the
-streaming twin must fold the same algebra across micro-batches with the
-replay guard."""
+decimal accumulation is what makes signed retraction exact."""
 
 from __future__ import annotations
 
@@ -106,99 +104,3 @@ def test_random_interleavings_match_recompute(spark):
             live.add(i)
             evs.append(("insert", pos, i, g, rng.uniform(-20, 120)))
     _run(spark, rows, evs)
-
-
-# ---------------------------------------------------------------------------
-# Streaming twin
-# ---------------------------------------------------------------------------
-
-from pyspark.sql import types as T  # noqa: E402
-
-from go_cdc_spark.streaming.ivm import IncrementalStats  # noqa: E402
-
-from .test_ivm import _ev, _write_segments  # noqa: E402
-
-
-def _run_stats(spark, tmp_path, segments):
-    from go_cdc_spark.streaming.pipeline import read_changelog_stream
-
-    seg = tmp_path / "ss"
-    _write_segments(seg, segments)
-    st = IncrementalStats(
-        spark, ["grp"], "val", str(tmp_path / "st_state"),
-        types={"grp": T.StringType(), "val": T.DoubleType()},
-    )
-    st.start(
-        read_changelog_stream(spark, str(seg)), str(tmp_path / "ckpt_st")
-    ).awaitTermination(120)
-    return st
-
-
-def _b(spark, events):
-    from go_cdc_spark.sources.changelog import changelog_df
-
-    rows = []
-    for e in events:
-        e = dict(e)
-        e["ts"] = None
-        rows.append(e)
-    return changelog_df(spark, rows)
-
-
-def test_stream_stats_folds_across_batches(spark, tmp_path):
-    st = _run_stats(spark, tmp_path, [
-        [_ev("insert", 1, 1, "a", 10.0), _ev("insert", 2, 2, "a", 20.0)],
-        [_ev("insert", 3, 3, "a", 30.0),
-         _ev("update", 4, 1, "a", 40.0, before=("a", 10.0)),
-         _ev("delete", 5, 2, before=("a", 20.0))],
-    ])
-    row = st.read_table().collect()[0]
-    # surviving values: 30, 40 → mean 35, sample var ((30-35)²+(40-35)²)/1 = 50
-    assert (row.grp, row.n_rows, row.n_vals) == ("a", 2, 2)
-    assert row.mean_val == 35.0 and row.var_val == 50.0
-    assert row.stddev_val == 50.0 ** 0.5
-
-
-def test_stream_stats_retraction_is_exact(spark, tmp_path):
-    """The decimal-accumulation claim, measured: fold values in and
-    back out and the sums return to the EXACT starting point (a float
-    accumulator would leave residue)."""
-    vals = [0.1, 0.2, 0.3]  # classic binary-float residue makers
-    st = _run_stats(spark, tmp_path, [
-        [_ev("insert", 1, 1, "a", 7.7)],
-        [_ev("insert", 10 + i, 10 + i, "a", v) for i, v in enumerate(vals)],
-        [_ev("delete", 20 + i, 10 + i, before=("a", v))
-         for i, v in enumerate(vals)],
-    ])
-    row = st.read_table().collect()[0]
-    assert (row.grp, row.n_vals, row.mean_val) == ("a", 1, 7.7)
-
-
-def test_stream_stats_delete_before_insert_commutes(spark, tmp_path):
-    st = IncrementalStats(
-        spark, ["grp"], "val", str(tmp_path / "s"),
-        types={"grp": T.StringType(), "val": T.DoubleType()},
-    )
-    # retraction arrives a batch before its insert: parks negative,
-    # hidden from reads, annihilates when the insert lands
-    st.process_batch(_b(spark, [_ev("delete", 2, 2, before=("b", 9.0))]), 0)
-    assert st.read_table().filter("grp = 'b'").count() == 0
-    st.process_batch(_b(spark, [_ev("insert", 1, 2, "b", 9.0),
-                                _ev("insert", 3, 3, "b", 11.0)]), 1)
-    row = st.read_table().collect()[0]
-    assert (row.grp, row.n_vals, row.mean_val) == ("b", 1, 11.0)
-
-
-def test_stream_stats_replay_is_noop(spark, tmp_path):
-    st = IncrementalStats(
-        spark, ["grp"], "val", str(tmp_path / "s"),
-        types={"grp": T.StringType(), "val": T.DoubleType()},
-    )
-    b0 = _b(spark, [_ev("insert", 1, 1, "a", 10.0)])
-    b1 = _b(spark, [_ev("insert", 2, 2, "a", 30.0)])
-    st.process_batch(b0, 0)
-    st.process_batch(b1, 1)
-    clean = sorted(map(tuple, st.read_table().collect()))
-    st.process_batch(b1, 1)  # replay
-    st.process_batch(b0, 0)  # stale replay
-    assert sorted(map(tuple, st.read_table().collect())) == clean

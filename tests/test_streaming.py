@@ -1,14 +1,11 @@
 """Streaming tests (SURVEY.md §5.4): changelog replay → foreachBatch
-MERGE, restart-from-checkpoint without double-apply (A18 recovery),
-stateful dedup, watermark late-data behavior, session windows."""
+MERGE, restart-from-checkpoint without double-apply (A18 recovery)."""
 
 from __future__ import annotations
 
 import json
-import time
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from go_cdc_spark.sources.changelog import format_pos
@@ -16,9 +13,6 @@ from go_cdc_spark.sources.meta import CheckpointStore
 from go_cdc_spark.streaming.pipeline import (
     StreamingMaterializer,
     read_changelog_stream,
-    stream_dedup,
-    stream_session_counts,
-    stream_tumbling_counts,
 )
 
 ACCOUNTS_SCHEMA = T.StructType(
@@ -120,184 +114,24 @@ def test_restart_from_checkpoint_no_double_apply(spark, tmp_path):
     assert mat.read_table().count() == 0
 
 
-def test_stream_dedup_drops_redelivery(spark, tmp_path):
-    seg = tmp_path / "segments"
-    dup = _ev("insert", 1, 200, name="a", balance="1.0", minute=1)
-    _write_segment(seg, "seg1.json", [dup, dup, _ev("update", 1, 201, name="b", balance="2.0", minute=2)])
-    stream = read_changelog_stream(spark, str(seg), max_files_per_trigger=1)
-    deduped = stream_dedup(stream, watermark_delay="10 minutes")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_sink")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT pos, COUNT(*) AS n FROM dedup_sink GROUP BY pos").collect()
-    assert {r.pos: r.n for r in got} == {format_pos(200): 1, format_pos(201): 1}
 
 
-def test_stream_tumbling_window_counts(spark, tmp_path):
-    seg = tmp_path / "segments"
-    _write_segment(seg, "seg1.json", [
-        _ev("insert", i, 300 + i, name="x", balance="1.0", minute=m)
-        for i, m in enumerate([1, 2, 3, 59])
-    ])
-    stream = read_changelog_stream(spark, str(seg))
-    agg = stream_tumbling_counts(stream, window_size="30 minutes", watermark_delay="5 minutes")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("tumbling_sink")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # availableNow + watermark: the final window may be withheld until a
-    # later trigger advances the watermark; assert on the closed window.
-    rows = spark.sql("SELECT * FROM tumbling_sink").collect()
-    closed = {(str(r.wstart), r.n_events) for r in rows}
-    assert ("2024-01-01 00:00:00", 3) in closed
+def test_declared_key_not_unique_in_snapshot_is_refused(spark, tmp_path):
+    """The MERGE keeps one row per key, so a snapshot with duplicate
+    declared keys would lose rows silently at the first batch; first
+    init refuses it instead. A restart over existing state does not
+    re-check (the state is the authority then)."""
+    import os
 
+    import pytest
 
-def test_stream_session_window(spark, tmp_path):
-    seg = tmp_path / "segments"
-    events = [
-        _ev("insert", 1, 400, name="x", balance="1.0", minute=1),
-        _ev("insert", 2, 401, name="x", balance="1.0", minute=5),
-        _ev("insert", 3, 402, name="x", balance="1.0", minute=50),  # new session (>30m gap)
-    ]
-    for e in events:
-        e["data"]["user"] = "7"
-    _write_segment(seg, "seg1.json", events)
-    stream = read_changelog_stream(spark, str(seg)).select(
-        F.col("data").getItem("user").cast("long").alias("user_id"), F.col("ts")
-    )
-    agg = stream_session_counts(stream, gap="30 minutes", watermark_delay="0 seconds")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("session_sink")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM session_sink ORDER BY session_start").collect()
-    assert [(r.user_id, r.n_events) for r in rows] == [(7, 2), (7, 1)]
+    dup = _snapshot(spark, [(1, "a", 1.0), (1, "b", 2.0), (2, "c", 3.0)])
+    state = str(tmp_path / "state")
+    with pytest.raises(ValueError, match=r"not unique.*\{'id': 1\} appears 2 times"):
+        StreamingMaterializer(spark, dup, keys=["id"], state_path=state, table="accounts")
+    assert not os.path.exists(state)
 
-
-def test_stream_stream_commit_join(spark, tmp_path):
-    """Row events join their txn's commit event within the interval
-    bound (stream-stream inner join with watermarks on both sides):
-    committed txn rows emit enriched, uncommitted ones never do."""
-    from go_cdc_spark.streaming.pipeline import stream_commit_join
-
-    rows_dir = tmp_path / "rows"
-    commits_dir = tmp_path / "commits"
-
-    def ev(op, pos, txn, minute):
-        return {
-            "data_source": "ds1",
-            "schema": "bank",
-            "table": "accounts",
-            "op": op,
-            "data": {"id": str(pos)} if op != "commit" else None,
-            "before": None,
-            "ts": f"2024-01-01T00:{minute:02d}:00.000000",
-            "pos": format_pos(pos),
-            "txn_id": txn,
-        }
-
-    _write_segment(rows_dir, "seg0.json", [
-        ev("insert", 1, "t1", 0),
-        ev("insert", 2, "t1", 1),
-        ev("insert", 3, "t2", 1),   # t2 never commits
-        ev("insert", 4, "t3", 0),   # t3 commits OUTSIDE the interval
-    ])
-    _write_segment(commits_dir, "seg0.json", [
-        ev("commit", 10, "t1", 5),
-        ev("commit", 11, "t3", 59),  # 59 min later > 10-minute bound
-    ])
-
-    rows = read_changelog_stream(spark, str(rows_dir))
-    commits = read_changelog_stream(spark, str(commits_dir))
-    joined = stream_commit_join(rows, commits, interval="10 minutes")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {(r.txn_id, r.row_pos) for r in spark.sql("SELECT * FROM ssj").collect()}
-    assert got == {("t1", format_pos(1)), ("t1", format_pos(2))}
-
-
-def test_stream_stream_commit_join_left_outer_emits_uncommitted(spark, tmp_path):
-    """left_outer mode: rows whose commit never arrives are EMITTED with
-    NULL commit columns once the watermark passes their join window —
-    the uncommitted-transaction detector. Watermark is advanced by a
-    second batch (restart against the same checkpoint, the established
-    file-replay pattern)."""
-    from go_cdc_spark.streaming.pipeline import stream_commit_join
-
-    rows_dir = tmp_path / "rows"
-    commits_dir = tmp_path / "commits"
-
-    def ev(op, pos, txn, minute, hour=0):
-        return {
-            "data_source": "ds1",
-            "schema": "bank",
-            "table": "accounts",
-            "op": op,
-            "data": {"id": str(pos)} if op != "commit" else None,
-            "before": None,
-            "ts": f"2024-01-01T{hour:02d}:{minute:02d}:00.000000",
-            "pos": format_pos(pos),
-            "txn_id": txn,
-        }
-
-    _write_segment(rows_dir, "seg0.json", [
-        ev("insert", 1, "t1", 0),
-        ev("insert", 3, "t2", 1),   # t2 never commits
-    ])
-    _write_segment(commits_dir, "seg0.json", [
-        ev("commit", 10, "t1", 5),
-    ])
-
-    out_dir = tmp_path / "out"
-
-    def drain():
-        rows = read_changelog_stream(spark, str(rows_dir))
-        commits = read_changelog_stream(spark, str(commits_dir))
-        joined = stream_commit_join(
-            rows, commits, interval="10 minutes", how="left_outer"
-        )
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    drain()
-    # watermark-advancing heartbeats in BOTH inputs (global watermark is
-    # the MIN across sources): 2h ahead >> 30m delay + 10m interval
-    _write_segment(rows_dir, "seg1.json", [ev("insert", 90, "t9", 0, hour=2)])
-    _write_segment(commits_dir, "seg1.json", [ev("commit", 91, "t9", 1, hour=2)])
-    drain()
-
-    got = {
-        (r.txn_id, r.row_pos, r.commit_pos)
-        for r in spark.read.parquet(str(out_dir)).collect()
-    }
-    assert ("t1", format_pos(1), format_pos(10)) in got  # committed: enriched
-    assert ("t2", format_pos(3), None) in got  # uncommitted: surfaced w/ NULLs
+    ok = _snapshot(spark, [(1, "a", 1.0), (2, "c", 3.0)])
+    StreamingMaterializer(spark, ok, keys=["id"], state_path=state)
+    restarted = StreamingMaterializer(spark, dup, keys=["id"], state_path=state)
+    assert restarted.read_table().count() == 2

@@ -111,263 +111,3 @@ def test_value_ties_break_deterministically(spark):
     rows = [(1, "a", 10), (2, "a", 10), (3, "a", 10)]
     out = _run(spark, rows, [("insert", 101, 4, "a", 10)])
     assert out == [("a", 1, 10.0, 1), ("a", 2, 10.0, 2)]
-
-
-# ---------------------------------------------------------------------------
-# Streaming twin (streaming/ivm.py::IncrementalTopK): top-k state with
-# minmax's dirty-and-repair generalized to rank k.
-# ---------------------------------------------------------------------------
-
-from pyspark.sql import types as T  # noqa: E402
-
-from go_cdc_spark.streaming.ivm import IncrementalTopK  # noqa: E402
-
-from .test_ivm import _ev, _write_segments  # noqa: E402
-
-
-def _run_topk(spark, tmp_path, segments, k=2):
-    from go_cdc_spark.streaming.pipeline import read_changelog_stream
-
-    seg = tmp_path / "tk"
-    _write_segments(seg, segments)
-    tk = IncrementalTopK(
-        spark, ["grp"], ["id"], "val", k, str(tmp_path / "tk_state"),
-        types={"grp": T.StringType(), "val": T.DoubleType(), "id": T.LongType()},
-    )
-    tk.start(
-        read_changelog_stream(spark, str(seg)), str(tmp_path / "ckpt_tk")
-    ).awaitTermination(120)
-    return tk
-
-
-def _rows(tk):
-    return sorted(
-        (r.grp, r.id, r.val, r.rank, r.dirty) for r in tk.read_table().collect()
-    )
-
-
-def test_stream_topk_inserts_fold_clean(spark, tmp_path):
-    tk = _run_topk(spark, tmp_path, [
-        [_ev("insert", 1, 1, "a", 5.0), _ev("insert", 2, 2, "a", 9.0)],
-        [_ev("insert", 3, 3, "a", 1.0), _ev("insert", 4, 4, "b", 7.0)],
-    ])
-    assert _rows(tk) == [
-        ("a", 1, 5.0, 2, False),
-        ("a", 2, 9.0, 1, False),
-        ("b", 4, 7.0, 1, False),
-    ]
-
-
-def test_stream_topk_below_k_insert_is_noop(spark, tmp_path):
-    tk = _run_topk(spark, tmp_path, [
-        [_ev("insert", 1, 1, "a", 9.0), _ev("insert", 2, 2, "a", 8.0)],
-        [_ev("insert", 3, 3, "a", 1.0)],  # below the full top-2
-    ])
-    assert _rows(tk) == [("a", 1, 9.0, 1, False), ("a", 2, 8.0, 2, False)]
-
-
-def test_stream_topk_delete_inside_topk_dirties_then_repair(spark, tmp_path):
-    from pyspark.sql import Row
-
-    tk = _run_topk(spark, tmp_path, [
-        [_ev("insert", 1, 1, "a", 9.0), _ev("insert", 2, 2, "a", 8.0),
-         _ev("insert", 3, 3, "a", 7.0)],
-        [_ev("delete", 4, 2, before=("a", 8.0))],  # rank-2 member
-    ])
-    assert all(r[4] for r in _rows(tk)), "group must be dirty"
-    base = spark.createDataFrame(
-        [Row(id=1, grp="a", val=9.0), Row(id=3, grp="a", val=7.0)]
-    )
-    assert tk.repair(base) == 1
-    assert _rows(tk) == [("a", 1, 9.0, 1, False), ("a", 3, 7.0, 2, False)]
-
-
-def test_stream_topk_delete_below_topk_stays_clean(spark, tmp_path):
-    tk = _run_topk(spark, tmp_path, [
-        [_ev("insert", 1, 1, "a", 9.0), _ev("insert", 2, 2, "a", 8.0),
-         _ev("insert", 3, 3, "a", 7.0)],
-        [_ev("delete", 4, 3, before=("a", 7.0))],  # not in stored top-2
-    ])
-    assert _rows(tk) == [("a", 1, 9.0, 1, False), ("a", 2, 8.0, 2, False)]
-
-
-def test_stream_topk_replay_is_noop_and_repair_keeps_stamp(spark, tmp_path):
-    from pyspark.sql import Row
-
-    from go_cdc_spark.sources.changelog import changelog_df
-
-    tk = IncrementalTopK(
-        spark, ["grp"], ["id"], "val", 2, str(tmp_path / "tk_state"),
-        types={"grp": T.StringType(), "val": T.DoubleType(), "id": T.LongType()},
-    )
-
-    def b(events):
-        rows = []
-        for e in events:
-            e = dict(e)
-            e["ts"] = None
-            rows.append(e)
-        return changelog_df(spark, rows)
-
-    b0 = b([_ev("insert", 1, 1, "a", 9.0), _ev("insert", 2, 2, "a", 8.0)])
-    b1 = b([_ev("delete", 3, 1, before=("a", 9.0))])
-    tk.process_batch(b0, 0)
-    tk.process_batch(b1, 1)
-    dirty_state = _rows(tk)
-    tk.process_batch(b1, 1)  # replay
-    tk.process_batch(b0, 0)  # stale replay
-    assert _rows(tk) == dirty_state
-    base = spark.createDataFrame([Row(id=2, grp="a", val=8.0)])
-    assert tk.repair(base) == 1
-    clean = _rows(tk)
-    assert clean == [("a", 2, 8.0, 1, False)]
-    tk.process_batch(b1, 1)  # replay AFTER repair must still be skipped
-    assert _rows(tk) == clean
-
-
-def test_stream_topk_intra_batch_insert_then_delete(spark, tmp_path):
-    """Several events for ONE key inside one micro-batch must collapse
-    per key: an insert followed by a delete of the same key leaves no
-    clean row behind, and insert+update leaves only the final image."""
-    from go_cdc_spark.sources.changelog import changelog_df
-
-    tk = IncrementalTopK(
-        spark, ["grp"], ["id"], "val", 2, str(tmp_path / "tk_state"),
-        types={"grp": T.StringType(), "val": T.DoubleType(), "id": T.LongType()},
-    )
-
-    def b(events):
-        rows = []
-        for e in events:
-            e = dict(e)
-            e["ts"] = None
-            rows.append(e)
-        return changelog_df(spark, rows)
-
-    # group 'a' already known to state
-    tk.process_batch(b([_ev("insert", 1, 1, "a", 9.0)]), 0)
-    # one batch: new key 7 inserted then deleted; new key 8 inserted
-    # then updated
-    tk.process_batch(b([
-        _ev("insert", 2, 7, "a", 5.0),
-        _ev("delete", 3, 7, before=("a", 5.0)),
-        _ev("insert", 4, 8, "a", 4.0),
-        _ev("update", 5, 8, "a", 6.0, before=("a", 4.0)),
-    ]), 1)
-    rows = _rows(tk)
-    ids = {r[1] for r in rows}
-    assert 7 not in ids, f"deleted-in-batch key must not appear: {rows}"
-    vals8 = [r for r in rows if r[1] == 8]
-    assert len(vals8) == 1 and vals8[0][2] == 6.0, (
-        f"key 8 must appear once with its final value: {rows}"
-    )
-
-
-def test_stream_topk_unknown_group_delete_keeps_dirty_sentinel(spark, tmp_path):
-    """A delete for a group state never saw (reordered events) must
-    persist its dirty flag even though the group has no stored rows —
-    via a sentinel row — so a later out-of-order insert cannot
-    silently resurrect the deleted row, and repair() rescans."""
-    from pyspark.sql import Row
-
-    from go_cdc_spark.sources.changelog import changelog_df
-
-    tk = IncrementalTopK(
-        spark, ["grp"], ["id"], "val", 2, str(tmp_path / "tk_state"),
-        types={"grp": T.StringType(), "val": T.DoubleType(), "id": T.LongType()},
-    )
-
-    def b(events):
-        rows = []
-        for e in events:
-            e = dict(e)
-            e["ts"] = None
-            rows.append(e)
-        return changelog_df(spark, rows)
-
-    # batch 0: delete arrives BEFORE its insert (cross-batch reorder)
-    tk.process_batch(b([_ev("delete", 20, 9, before=("z", 7.0))]), 0)
-    sent = [r for r in tk.read_table().collect() if r.grp == "z"]
-    assert sent and all(r.dirty for r in sent), "dirty flag must survive"
-    # batch 1: the late insert lands — group must STAY dirty (the fold
-    # cannot know the delete already consumed it)
-    tk.process_batch(b([_ev("insert", 10, 9, "z", 7.0)]), 1)
-    assert all(r.dirty for r in tk.read_table().collect() if r.grp == "z")
-    # repair against the true base (key 9 is gone) removes the ghost
-    base = spark.createDataFrame([Row(id=1, grp="other", val=1.0)])
-    assert tk.repair(base) >= 1
-    assert not [r for r in tk.read_table().collect() if r.grp == "z"]
-
-
-def test_stream_topk_key_mutating_update_intra_batch(spark, tmp_path):
-    """An update whose before-image key differs from its after-image
-    key (PK mutation) is delete(old)+insert(new): the per-key collapse
-    windows partition by the coalesced NEW key, so without the split
-    the OLD key's final op stays a live insert — a phantom row."""
-    from go_cdc_spark.sources.changelog import changelog_df
-
-    tk = IncrementalTopK(
-        spark, ["grp"], ["id"], "val", 2, str(tmp_path / "tk_state"),
-        types={"grp": T.StringType(), "val": T.DoubleType(), "id": T.LongType()},
-    )
-
-    def b(events):
-        rows = []
-        for e in events:
-            e = dict(e)
-            e["ts"] = None
-            rows.append(e)
-        return changelog_df(spark, rows)
-
-    mv = _ev("update", 3, 6, "a", 4.0, before=("a", 3.0))
-    mv["before"]["id"] = "5"  # key 5 migrates to key 6
-    tk.process_batch(
-        b([_ev("insert", 1, 1, "a", 9.0), _ev("insert", 2, 5, "a", 3.0), mv]), 0
-    )
-    rows = {(r.grp, r.id): (r.val, r.rank) for r in tk.read_table().collect()}
-    assert ("a", 5) not in rows, "old key must be retracted, not left live"
-    assert rows[("a", 1)][0] == 9.0 and rows[("a", 6)][0] == 4.0
-    # the retraction of a state-unknown key conservatively dirtied the
-    # group; repair converges to the recompute
-    from pyspark.sql import Row
-
-    base = spark.createDataFrame(
-        [Row(id=1, grp="a", val=9.0), Row(id=6, grp="a", val=4.0)]
-    )
-    tk.repair(base)
-    assert _rows(tk) == [("a", 1, 9.0, 1, False), ("a", 6, 4.0, 2, False)]
-
-
-def test_stream_topk_key_mutating_update_cross_batch(spark, tmp_path):
-    """A stored top-k key migrating to a new key in a later batch:
-    the old key's group dirties (its row leaves the top-k) and the new
-    key folds; repair surfaces the final ranking."""
-    from pyspark.sql import Row
-
-    from go_cdc_spark.sources.changelog import changelog_df
-
-    tk = IncrementalTopK(
-        spark, ["grp"], ["id"], "val", 2, str(tmp_path / "tk_state"),
-        types={"grp": T.StringType(), "val": T.DoubleType(), "id": T.LongType()},
-    )
-
-    def b(events):
-        rows = []
-        for e in events:
-            e = dict(e)
-            e["ts"] = None
-            rows.append(e)
-        return changelog_df(spark, rows)
-
-    tk.process_batch(
-        b([_ev("insert", 1, 1, "a", 9.0), _ev("insert", 2, 2, "a", 8.0)]), 0
-    )
-    mv = _ev("update", 3, 7, "a", 8.5, before=("a", 8.0))
-    mv["before"]["id"] = "2"  # stored rank-2 key migrates to key 7
-    tk.process_batch(b([mv]), 1)
-    assert any(r.dirty for r in tk.read_table().collect())
-    base = spark.createDataFrame(
-        [Row(id=1, grp="a", val=9.0), Row(id=7, grp="a", val=8.5)]
-    )
-    assert tk.repair(base) == 1
-    assert _rows(tk) == [("a", 1, 9.0, 1, False), ("a", 7, 8.5, 2, False)]

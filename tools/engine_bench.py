@@ -50,7 +50,9 @@ TABLES = {
     "supplier": ["s_suppkey"],
     "part": ["p_partkey"],
     "orders": ["o_orderkey"],
-    "lineitem": ["l_orderkey", "l_linenumber"],
+    # (l_orderkey, l_linenumber) is not unique in the generated data;
+    # these five columns are
+    "lineitem": ["l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_shipdate"],
 }
 
 

@@ -56,10 +56,8 @@ def _event(pos: int) -> dict:
         "pos": format_pos(pos),
         "txn_id": None,
     }
-    image = {"id": str(key), "v": f"v{pos}",
-             "grp": str(key % 16), "val": str(float(pos % 1000))}
-    # full before-images (binlog_row_image=FULL) so the same event
-    # stream also drives the IVM delta fold
+    image = {"id": str(key), "v": f"v{pos}"}
+    # full before-images (binlog_row_image=FULL), as the binlog emits
     if op in ("update", "delete"):
         e["before"] = _LIVE[key]
     if op == "delete":
@@ -82,80 +80,6 @@ def _write_segments(root: str, n_segments: int) -> str:
                 f.write(json.dumps(_event(i + 1)) + "\n")
         os.utime(p, (t0 + s, t0 + s))
     return seg
-
-
-def _drain_ivm(spark, seg: str, root: str, tag: str, files_per_trigger: int) -> float:
-    """Aggregate-maintenance path: same event stream, folded into a
-    16-group SUM/COUNT by IncrementalAggregate (per-batch cost is
-    O(batch + groups) — the figure that shows maintenance beats
-    recompute at any base-table size)."""
-    from pyspark.sql import types as T
-
-    from go_cdc_spark.streaming.ivm import IncrementalAggregate
-
-    ivm = IncrementalAggregate(
-        spark, ["grp"], "val", os.path.join(root, f"ivm_{tag}"),
-        types={"grp": T.StringType()},
-    )
-    stream = read_changelog_stream(
-        spark, seg, max_files_per_trigger=files_per_trigger
-    )
-    t0 = time.monotonic()
-    q = ivm.start(stream, os.path.join(root, f"ivm_ckpt_{tag}"))
-    q.awaitTermination(600)
-    dt = time.monotonic() - t0
-    assert 0 < ivm.read_table().count() <= 16
-    return dt
-
-
-def _drain_family(spark, seg: str, root: str, tag: str, files_per_trigger: int) -> dict:
-    """Round-6 IVM twins over the same stream: top-k (dirty-and-repair)
-    and fixed-bin histogram (pure signed deltas) — per-batch cost
-    O(batch + touched state), the maintenance-beats-recompute figure
-    for each algebra."""
-    from pyspark.sql import types as T
-
-    from go_cdc_spark.streaming.ivm import IncrementalHistogram, IncrementalTopK
-
-    types = {"grp": T.StringType(), "val": T.DoubleType(), "id": T.LongType()}
-    out = {}
-    tk = IncrementalTopK(
-        spark, ["grp"], ["id"], "val", 3, os.path.join(root, f"tk_{tag}"),
-        types=types,
-    )
-    t0 = time.monotonic()
-    tk.start(
-        read_changelog_stream(spark, seg, max_files_per_trigger=files_per_trigger),
-        os.path.join(root, f"tk_ckpt_{tag}"),
-    ).awaitTermination(600)
-    out["topk_sec"] = time.monotonic() - t0
-    assert 0 < tk.read_table().count() <= 16 * 3
-
-    h = IncrementalHistogram(
-        spark, ["grp"], "val", 0.0, 1000.0, 20, os.path.join(root, f"h_{tag}"),
-        types=types,
-    )
-    t0 = time.monotonic()
-    h.start(
-        read_changelog_stream(spark, seg, max_files_per_trigger=files_per_trigger),
-        os.path.join(root, f"h_ckpt_{tag}"),
-    ).awaitTermination(600)
-    out["hist_sec"] = time.monotonic() - t0
-    assert 0 < h.read_table().count() <= 16
-
-    from go_cdc_spark.streaming.ivm import IncrementalStats
-
-    st = IncrementalStats(
-        spark, ["grp"], "val", os.path.join(root, f"st_{tag}"), types=types
-    )
-    t0 = time.monotonic()
-    st.start(
-        read_changelog_stream(spark, seg, max_files_per_trigger=files_per_trigger),
-        os.path.join(root, f"st_ckpt_{tag}"),
-    ).awaitTermination(600)
-    out["stats_sec"] = time.monotonic() - t0
-    assert 0 < st.read_table().count() <= 16
-    return out
 
 
 def _drain(spark, seg: str, root: str, tag: str, files_per_trigger: int) -> float:
@@ -186,9 +110,6 @@ def main() -> None:
         _drain(spark, seg10, root, "warm", files_per_trigger=10)
         t_big = _drain(spark, seg10, root, "big", files_per_trigger=10)
         t_micro = _drain(spark, seg10, root, "micro", files_per_trigger=1)
-        t_ivm_big = _drain_ivm(spark, seg10, root, "big", files_per_trigger=10)
-        t_ivm_micro = _drain_ivm(spark, seg10, root, "micro", files_per_trigger=1)
-        fam = _drain_family(spark, seg10, root, "big", files_per_trigger=10)
         print(
             json.dumps(
                 {
@@ -199,11 +120,6 @@ def main() -> None:
                     "one_batch_sec": round(t_big, 2),
                     "ten_batches_eps": round(N_EVENTS / t_micro),
                     "ten_batches_sec": round(t_micro, 2),
-                    "ivm_one_batch_eps": round(N_EVENTS / t_ivm_big),
-                    "ivm_ten_batches_eps": round(N_EVENTS / t_ivm_micro),
-                    "ivm_topk_eps": round(N_EVENTS / fam["topk_sec"]),
-                    "ivm_hist_eps": round(N_EVENTS / fam["hist_sec"]),
-                    "ivm_stats_eps": round(N_EVENTS / fam["stats_sec"]),
                 }
             )
         )
