@@ -43,50 +43,6 @@ from .streaming.restart import RestartPolicy, run_with_restart
 from .streaming.txn_gate import ReadCommittedGate
 
 
-# Demux MERGE fan-out collapse guard (VERDICT r11 #5). Probed on
-# local[32] (SCALE.md round-11): 48 tables × 8 workers collapses to
-# 0.29× sequential (8 concurrent foreachBatch MERGEs × 32-task stages
-# thrash the single JVM's scheduler/GC) while 16 tables × 8 workers is
-# 2.6× FASTER — the hazard is table-count × concurrency on ONE JVM.
-# So the cap applies only to local masters; a multi-executor cluster
-# (concurrent jobs land on otherwise-idle executors) keeps the user's
-# configured value.
-_LOCAL_SAFE_MERGE_WORKERS = 4  # probed optimum at 48 tables (2.20×)
-_LOCAL_MANY_TABLES = 16  # largest probed table count where w8 still won
-
-
-def effective_merge_workers(requested: int, n_touched: int, master: str) -> int:
-    """Bound the demux MERGE fan-out to the probed safe point: on a
-    ``local[*]`` master with more than ``_LOCAL_MANY_TABLES`` touched
-    tables, cap at ``_LOCAL_SAFE_MERGE_WORKERS`` (a user setting 8 on a
-    many-table local source would silently lose 3×, the probed
-    pathological point). Never raises the requested value."""
-    workers = min(int(requested), n_touched)
-    # single-JVM masters only: "local" / "local[N]" / "local[N,F]".
-    # "local-cluster[n,c,m]" is MULTI-JVM (one executor process per
-    # worker) — the probed single-JVM scheduler collapse does not apply
-    # there, so the user's configured value stands (ADVICE r12)
-    single_jvm = master == "local" or master.startswith("local[")
-    if (
-        single_jvm
-        and n_touched > _LOCAL_MANY_TABLES
-        and workers > _LOCAL_SAFE_MERGE_WORKERS
-    ):
-        import warnings
-
-        warnings.warn(
-            f"merge_concurrency={requested} capped to "
-            f"{_LOCAL_SAFE_MERGE_WORKERS} on a local master with "
-            f"{n_touched} touched tables: the probed local[32] A/B "
-            "(SCALE.md round-11) shows 8 workers at 48 tables running "
-            "0.29× SEQUENTIAL speed; raise the knob on a multi-executor "
-            "cluster instead",
-            stacklevel=2,
-        )
-        return _LOCAL_SAFE_MERGE_WORKERS
-    return workers
-
-
 @dataclass
 class SourceHolder:
     """`DataSourceHolder` analog (`internal/syncdb/data_source.go:42-55`):
@@ -172,7 +128,7 @@ class Engine:
             self.config.state_dir, f"src{holder.id}", schema, table
         )
 
-    def full_sync(self, concurrency: int = 10) -> dict[int, list[TableSnapshot]]:
+    def full_sync(self) -> dict[int, list[TableSnapshot]]:
         """`FullAmountService.Run` analog: per source, discover → filter →
         bounded-parallel per-table snapshot (checkpointing each table's
         position), then materialize each table's typed state so the
@@ -184,7 +140,6 @@ class Engine:
                 holder.name,
                 rules=holder.rules,
                 checkpoint=self.meta,
-                concurrency=concurrency,
             )
             results[holder.id] = snaps
             for snap in snaps:
@@ -206,7 +161,6 @@ class Engine:
                     meta=None if holder.config.read_committed else self.meta,
                     data_source_id=holder.name,
                     table=snap.table,
-                    skew_robust=holder.config.skew_robust,
                 )
         return results
 
@@ -610,11 +564,11 @@ class Engine:
         has no OSS-Spark wire equivalent. An optional schema-change topic
         dir unions in as op='ddl' events.
 
-        ``catchup`` widens the per-trigger file bound for availableNow
-        backlog drains (see SourceConfig.catchup_files_per_trigger)."""
+        ``catchup`` reads 8x ``max_files_per_trigger`` files per trigger
+        for availableNow backlog drains (see SourceConfig)."""
         mfpt = cfg.max_files_per_trigger
         if catchup:
-            mfpt = cfg.catchup_files_per_trigger or 8 * mfpt
+            mfpt = 8 * mfpt
         if cfg.changelog_format == "debezium":
             from .sources.debezium import (
                 debezium_schema_changes,
@@ -699,7 +653,6 @@ class Engine:
         self,
         continuous: bool = False,
         restart_policy: RestartPolicy | None = None,
-        demux: bool = True,
     ) -> None:
         """Tail each source's changelog directory and MERGE into the
         materialized tables. ``availableNow`` (default) drains what
@@ -708,7 +661,7 @@ class Engine:
         :class:`RestartPolicy` on failure. Attach safety runs first:
         a purged-past-watermark changelog aborts the boot loudly.
 
-        ``demux`` (default): ONE stream per SOURCE reads the shared
+        Flat sources demux: ONE stream per SOURCE reads the shared
         changelog once per micro-batch and fans the batch out to every
         table's MERGE inside one foreachBatch — the reference's shape
         (one replication socket feeding per-table appliers,
@@ -724,15 +677,12 @@ class Engine:
         per-stream. History (SCD2) sources ALSO keep the per-table
         path: Scd2Materializer's interval derivation is replay-
         sensitive (a replayed event re-derives rows that already exist
-        as closed intervals, scd2.py), and switching an existing
-        deployment onto the demux checkpoint identity would replay the
-        whole drained changelog through it — the run_id-scoped replay
-        stamp returns None under a NEW checkpoint, and pos_threshold
-        only filters events at-or-below the snapshot position, not
-        already-applied incremental events. For flat (pos-latest-wins
-        MERGE) tables that replay IS idempotent, so switching modes is
-        safe but wasteful: the new checkpoint drains the changelog
-        once more."""
+        as closed intervals, scd2.py), and moving a deployment onto the
+        demux checkpoint identity would replay the whole drained
+        changelog through it — the run_id-scoped replay stamp returns
+        None under a NEW checkpoint, and pos_threshold only filters
+        events at-or-below the snapshot position, not already-applied
+        incremental events."""
         self.check_attach()
 
         def make_start(holder: SourceHolder, schema: str, table: str, mat):
@@ -829,11 +779,10 @@ class Engine:
                         # match the sequential loop: the first raise fails
                         # the batch, the replayed batch skips tables whose
                         # applied-batch stamp already advanced.
-                        workers = effective_merge_workers(
-                            cfg.merge_concurrency,
-                            len(work),
-                            self.spark.sparkContext.master,
-                        )
+                        # 4 workers: the probed optimum at 48 tables on
+                        # local[32]; 8 ran at 0.29x sequential (SCALE.md
+                        # round-11).
+                        workers = min(4, len(work))
                         if workers <= 1:
                             for item in work:
                                 apply_one(item)
@@ -866,11 +815,7 @@ class Engine:
         work = []
         for src_id, mats in by_source.items():
             holder = self.registry[src_id]
-            if (
-                demux
-                and not holder.config.read_committed
-                and not holder.config.history
-            ):
+            if not holder.config.read_committed and not holder.config.history:
                 work.append(make_demux_start(holder, mats))
             else:
                 work += [

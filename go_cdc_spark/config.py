@@ -74,33 +74,19 @@ class SourceConfig:
     # op='commit' — required for read_committed over a Debezium source,
     # since Debezium data events carry no XID-equivalent terminator
     txn_changelog: str | None = None
+    # continuous-tail batch bound (the reference's 1000-message channel
+    # analog): segment files per micro-batch, for latency and bounded
+    # memory. availableNow catch-up drains read 8x this many, since each
+    # micro-batch costs one full state merge per touched table and
+    # per-segment batches would multiply the state rewrites for nothing
     max_files_per_trigger: int = 1
-    # BACKLOG-DRAIN batch bound: availableNow catch-up reads up to this
-    # many segment files per micro-batch (None = 8x the continuous
-    # bound). Each micro-batch costs one full state merge per touched
-    # table, so draining a deep backlog in per-segment batches multiplies
-    # the state-rewrite volume for nothing; bigger catch-up batches are
-    # the standard Trigger.AvailableNow usage. Continuous tails keep the
-    # tight max_files_per_trigger bound (the reference's 1000-message
-    # channel analog) for latency and bounded memory.
-    catchup_files_per_trigger: int | None = None
     # buffer row events until their txn's commit event (OnRow/OnXID
     # parity); default off = apply-as-they-arrive like the materializer
     read_committed: bool = False
-    # hot-PK change streams (counter rows, queue heads): collapse each
-    # micro-batch with the max_by hash aggregate instead of the window
-    # sort (see operators.cdc.cdc_collapse skew_robust)
-    skew_robust: bool = False
     # maintain SCD2 version history instead of flat current state
     # (streaming/scd2.py): read_table() still serves current rows;
     # Engine.read_history / read_table_asof expose time travel
     history: bool = False
-    # demux MERGE fan-out bound: tables touched by one micro-batch run
-    # their MERGEs on a thread pool of this size (1 = the sequential
-    # loop). Each MERGE is an independent Spark job over a disjoint
-    # state dir; at 100+ tables a sequential loop serializes the batch
-    # behind its slowest table (VERDICT r10 #3)
-    merge_concurrency: int = 4
     # query-based incremental capture (sources/polling.py): poll the
     # JDBC source with plain SELECTs and write change events into the
     # changelog dir for the regular incremental drain — the public

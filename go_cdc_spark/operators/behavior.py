@@ -506,12 +506,15 @@ def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("x"))
     )
+    # percentile buffer: one (value, count) entry per distinct daily
+    # value of the type, so ≤ |days| entries per event_type group
     med = daily.groupBy("event_type").agg(
         F.percentile("x", F.lit(0.5)).alias("med")
     )
     dev = daily.join(F.broadcast(med), "event_type").select(
         "event_type", "day", "x", "med", F.abs(F.col("x") - F.col("med")).alias("adev")
     )
+    # percentile buffer: ≤ |days| distinct deviations per event_type
     mad = dev.groupBy("event_type").agg(
         F.percentile("adev", F.lit(0.5)).alias("mad")
     )
@@ -631,6 +634,9 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "monetary",
         )
     )
+    # one global group; each percentile buffer holds one entry per
+    # distinct value: ≤ |days| (recency), ≤ max orders per customer
+    # (frequency), ≤ |customers| (monetary)
     q = cust.agg(
         F.percentile(F.col("recency_days").cast("double"), F.lit(0.25)).alias("r1"),
         F.percentile(F.col("recency_days").cast("double"), F.lit(0.5)).alias("r2"),
@@ -891,6 +897,8 @@ def orders_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total")
     )
+    # one global group; each of the nine percentile buffers holds one
+    # entry per distinct spend, so ≤ |customers| entries
     qs = cust.agg(
         *[
             F.percentile("spend", F.lit(round(1 - k / 10, 1))).alias(f"q{k}")

@@ -7,8 +7,8 @@ making snapshot ⊕ stream gap-free and overlap-free without downstream
 idempotency. Both operators are pure DataFrame plans:
 
 - :func:`cdc_collapse` — latest event per PK by position, deletes drop
-  the key. One shuffle on the PK (window or groupBy-max; Spark plans a
-  partial TopK under AQE).
+  the key. One shuffle on the PK (a window; Spark plans a partial
+  top-1 per key below the exchange).
 - :func:`apply_changes` — MERGE without Delta: collapse the changes,
   anti-join the snapshot on changed keys, union the non-delete images.
   At 100 TB you partition the base table by bucket(PK) and rewrite only
@@ -36,44 +36,21 @@ def cdc_collapse(
     pos_col: str = "pos",
     op_col: str = "op",
     keep_deletes: bool = False,
-    skew_robust: bool = False,
 ) -> DataFrame:
     """Collapse a change stream to current state: latest row per key by
     position; delete events tombstone the key (dropped unless asked for).
 
-    Two physical strategies, same result (parity-tested):
-
-    - default (``skew_robust=False``): window ``row_number``. Spark's
-      rank-limit pushdown (WindowGroupLimit, 3.5+) plans a PARTIAL
-      top-1-per-key prune below the exchange, so even a hot key ships
-      at most one surviving row per map partition — skew-safe, at the
-      cost of a sort on each side of the shuffle. Measured faster at
-      uniform key distributions (interleaved A/B at 10× sf0.1: 0.28s
-      vs 0.33s).
-    - ``skew_robust=True``: ``max_by(struct(row), pos)`` hash
-      aggregate — the same map-side-combine property without any sort,
-      and without depending on the WindowGroupLimit optimizer rule
-      (which a deployment can disable via
-      ``spark.sql.optimizer.windowGroupLimitThreshold=-1``, reverting
-      the window form to a full single-reducer sort per hot key).
-      Prefer it when pos-sorted batches are large or the optimizer
-      rule's presence can't be assumed.
-    """
-    if skew_robust:
-        others = [c for c in changes.columns if c not in keys]
-        latest = (
-            changes.groupBy(*keys)
-            .agg(F.max_by(F.struct(*others), F.col(pos_col)).alias("__r"))
-            .select(*keys, "__r.*")
-            .select(*changes.columns)
-        )
-    else:
-        w = Window.partitionBy(*keys).orderBy(F.desc(pos_col))
-        latest = (
-            changes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+    Window ``row_number``: Spark's rank-limit pushdown (WindowGroupLimit,
+    3.5+) plans a PARTIAL top-1-per-key prune below the key exchange, so
+    even a hot key ships at most one surviving row per map partition —
+    skew-safe, at the cost of a sort on each side of the shuffle (the
+    plan shape is pinned in tests/test_plans.py)."""
+    w = Window.partitionBy(*keys).orderBy(F.desc(pos_col))
+    latest = (
+        changes.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
     if keep_deletes:
         return latest
     return latest.filter(F.col(op_col) != OP_DELETE)

@@ -1022,13 +1022,17 @@ def dedup_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ran the gram explode TWICE (once per consumer) and broadcast the
     # dup keys back. Both window specs share one hash(gram) exchange;
     # rn over the unfiltered partitions equals rn-after-the-join
-    # because the dup screen removes whole gram partitions.
+    # because the dup screen removes whole gram partitions. "≥ 2
+    # distinct docs" is min(doc_id) < max(doc_id): a fixed-size window
+    # buffer, however many docs share a boilerplate gram.
     w_g = Window.partitionBy("gram")
     w = Window.partitionBy("gram").orderBy("doc_id", "spos")
     noncanon = (
-        grams.withColumn("nd", F.size(F.collect_set("doc_id").over(w_g)))
+        grams.withColumn(
+            "dup", F.min("doc_id").over(w_g) < F.max("doc_id").over(w_g)
+        )
         .withColumn("rn", F.row_number().over(w))
-        .filter((F.col("nd") >= 2) & (F.col("rn") > 1))
+        .filter(F.col("dup") & (F.col("rn") > 1))
     )
     drops = noncanon.select(
         "doc_id",

@@ -210,9 +210,10 @@ class PollingCapture:
             # (ADVICE r12: a fixed min(8, …) ceiling silently broke the
             # per-file bound past 400k events): a poll is almost always
             # a small delta (1 file); a huge bootstrap gets one file
-            # per ~50k events, and the drain's catchup_files_per_trigger
-            # batches them. coalesce cannot EXCEED the plan's partition
-            # count, so past (partitions × 50k) events per-file volume
+            # per ~50k events, and the availableNow drain batches them
+            # (8x max_files_per_trigger files per trigger). coalesce
+            # cannot EXCEED the plan's partition count, so past
+            # (partitions × 50k) events per-file volume
             # grows proportionally — but the write stays parallel across
             # every partition, which is the hazard the bound exists for
             # (never serialize a bootstrap through one writer; never

@@ -77,22 +77,15 @@ class StreamingMaterializer:
         meta: CheckpointStore | None = None,
         data_source_id: str = "ds1",
         table: str | None = None,
-        quarantine_path: str | None = None,
-        skew_robust: bool = False,
     ):
         self.spark = spark
         self.keys = keys
         self.state_path = state_path
         self.pos_threshold = pos_threshold
-        # hot-PK change streams (counter rows, queue heads): use the
-        # max_by hash-aggregate collapse so the per-batch latest-wins
-        # gets a map-side combine instead of a single-reducer sort
-        self.skew_robust = skew_robust
         self.schema = snapshot.schema
         self.meta = meta
         self.data_source_id = data_source_id
         self.table = table
-        self.quarantine_path = quarantine_path
         self._run_id: str | None = None  # set by start(); see applied_batch
         self._pending_renames: dict[str, tuple[str, object]] = {}
         # ADD COLUMN ... DEFAULT backfill: pending = this batch's state
@@ -304,16 +297,13 @@ class StreamingMaterializer:
             *[col_for(f) for f in self.schema.fields], POS_COL, OP_COL
         )
 
-    def _quarantine_split(self, rows: DataFrame) -> DataFrame:
-        """Dead-letter poison rows: an event carrying ANY value that
-        does not decode to its target type — under ANSI mode (Spark 4
-        default) ONE such row aborts the whole micro-batch, and for a
-        merge key there is no sane fallback at all. With a quarantine
-        path set, the RAW envelopes of such rows (detected via
-        try_cast) append to a parquet dead-letter table for
-        replay/inspection — the reference's log-and-skip error path,
-        made durable — and the batch proceeds without them. Without
-        one, they raise: fail-stop beats silent loss."""
+    def _reject_poison(self, rows: DataFrame) -> None:
+        """Fail the batch on poison rows: an event carrying ANY value
+        that does not decode to its column type (detected via try_cast).
+        Under ANSI mode (Spark 4 default) one such row would abort the
+        micro-batch anyway, and for a merge key there is no sane
+        fallback at all; raising here names the table instead —
+        fail-stop beats silent loss."""
         poison = F.lit(False)
         for f in self.schema.fields:
             if isinstance(f.dataType, T.BinaryType):
@@ -324,35 +314,26 @@ class StreamingMaterializer:
             if f.name in self.keys:
                 raw = F.coalesce(raw, F.col("before").getItem(f.name))
             poison = poison | (raw.isNotNull() & raw.try_cast(f.dataType).isNull())
-        bad = rows.filter(poison)
-        if self.quarantine_path is None:
-            n = bad.limit(1).count()
-            if n:
-                raise ValueError(
-                    "poison change rows (merge key fails to decode); "
-                    "set quarantine_path to dead-letter them"
-                )
-            return rows
-        bad.write.mode("append").parquet(self.quarantine_path)
-        return rows.filter(~poison)
+        if rows.filter(poison).limit(1).count():
+            raise ValueError(
+                f"poison change rows for table {self.table or self.state_path!r}: "
+                "a value does not decode to its column type"
+            )
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         changes = batch
         if self.pos_threshold is not None:
             changes = changes.filter(F.col("pos") > F.lit(self.pos_threshold))
         self._apply_ddl(changes)
-        typed = self._typed_changes(
-            self._quarantine_split(
-                changes.filter(F.col("op").isin("insert", "update", "delete"))
-            )
-        )
+        rows = changes.filter(F.col("op").isin("insert", "update", "delete"))
+        self._reject_poison(rows)
+        typed = self._typed_changes(rows)
         merged = cdc_collapse(
             self._aligned_state().unionByName(typed),
             self.keys,
             pos_col=POS_COL,
             op_col=OP_COL,
             keep_deletes=True,  # tombstones persist in state
-            skew_robust=self.skew_robust,
         )
         storeio.swap_in(merged, self.state_path)
         self._pending_renames = {}  # the write persisted the new names

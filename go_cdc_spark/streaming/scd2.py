@@ -113,11 +113,10 @@ class Scd2Materializer(StreamingMaterializer):
             # idempotent (keyed, max-pos), so advancing it here is safe.
             self._advance_meta(changes)
             return
-        typed = self._typed_changes(
-            self._quarantine_split(
-                changes.filter(F.col("op").isin("insert", "update", "delete"))
-            )
-        ).dropDuplicates([*self.keys, POS_COL])  # within-batch redelivery guard
+        rows = changes.filter(F.col("op").isin("insert", "update", "delete"))
+        self._reject_poison(rows)
+        # within-batch redelivery guard
+        typed = self._typed_changes(rows).dropDuplicates([*self.keys, POS_COL])
         state = self.state()
         fields = [f.name for f in self.schema.fields]
         # CROSS-batch redelivery guard (ADVICE r12 medium): drop incoming

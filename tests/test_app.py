@@ -538,25 +538,6 @@ include_tables = ["region"]
     assert s2[0] == "DBZ-V2" and s2[2] == "ASIA"
 
 
-def test_skew_robust_config_reaches_materializer(spark, tmp_path):
-    """[[source]] skew_robust = true must flow through Engine boot into
-    every materializer (and parse as a plain boolean)."""
-    seg_dir = tmp_path / "changelog"
-    seg_dir.mkdir()
-    cfg_path = _write_config(tmp_path, seg_dir)
-    with open(cfg_path) as f:
-        txt = f.read()
-    txt = txt.replace("[[source]]", "[[source]]\nskew_robust = true", 1)
-    with open(cfg_path, "w") as f:
-        f.write(txt)
-    cfg = load_config(cfg_path)
-    assert cfg.sources[0].skew_robust is True
-    engine = Engine(cfg, spark=spark)
-    engine.init_sources()
-    engine.full_sync()
-    assert engine.tables and all(m.skew_robust for m in engine.tables.values())
-
-
 def test_engine_boot_over_derby_jdbc_metadata(spark, tmp_path):
     """Config-driven boot against a REAL SQL database: type =
     "jdbc_metadata" (portable DatabaseMetaData discovery) pointed at
@@ -816,9 +797,9 @@ def test_demux_keeps_history_sources_on_per_table_path(spark, tmp_path):
     identity — a pre-existing deployment that already drained events
     through per-table checkpoints would replay the whole changelog
     under the new `_demux` checkpoint and duplicate every closed
-    interval. Proven at the upgrade boundary: drain with demux=False
-    (the old deployment), then sync again with the demux default —
-    history row counts are unchanged and no _demux checkpoint exists."""
+    interval. Proven across repeated syncs: drain, then sync again —
+    history row counts are unchanged, no _demux checkpoint exists, and
+    fresh events still flow through the per-table checkpoint."""
     import os as _os
 
     seg_dir = tmp_path / "changelog"
@@ -854,8 +835,8 @@ include_tables = ["region"]
             _event(p + 2, "update", {"r_regionkey": "2", "r_name": "ASIA-v3"})
         ) + "\n")
 
-    # the "pre-existing deployment": per-table checkpoints, events applied
-    engine.incremental_sync(demux=False)
+    # per-table checkpoints, events applied
+    engine.incremental_sync()
 
     def versions():
         return [
@@ -869,8 +850,8 @@ include_tables = ["region"]
     before = versions()
     assert [v[0] for v in before] == ["ASIA", "ASIA-v2", "ASIA-v3"]
 
-    # the "upgrade": default demux. History sources must keep the
-    # per-table checkpoint identity — same events, same intervals.
+    # a second sync: history sources keep the per-table checkpoint
+    # identity — same events, same intervals.
     engine.incremental_sync()
     assert versions() == before  # no duplicated closed intervals
     assert not _os.path.exists(
@@ -878,7 +859,7 @@ include_tables = ["region"]
     ), "history source was routed through the demux checkpoint"
     assert _os.path.exists(str(tmp_path / "ckpt" / "src1" / "main" / "region"))
 
-    # and fresh events still flow through the per-table path post-upgrade
+    # and fresh events still flow through the per-table path
     with open(seg_dir / "seg1.json", "w") as f:
         f.write(json.dumps(
             _event(p + 3, "update", {"r_regionkey": "2", "r_name": "ASIA-v4"})
@@ -886,40 +867,6 @@ include_tables = ["region"]
     engine.incremental_sync()
     names = [v[0] for v in versions()]
     assert names == ["ASIA", "ASIA-v2", "ASIA-v3", "ASIA-v4"]
-
-
-def test_effective_merge_workers_caps_probed_collapse():
-    """VERDICT r11 #5: the probed local[32] collapse (8 workers × 48
-    tables = 0.29× sequential, SCALE.md round-11) must be unreachable
-    through config on a local master; every other probed point keeps
-    the user's value. Cluster masters are never capped."""
-    import warnings
-
-    from go_cdc_spark.app import effective_merge_workers
-
-    # the pathological probed point: capped to the probed optimum
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        assert effective_merge_workers(8, 48, "local[32]") == 4
-    assert any("0.29" in str(x.message) for x in w)
-
-    # probed-safe points keep the configured value
-    assert effective_merge_workers(8, 16, "local[32]") == 8  # w8 won at 16
-    assert effective_merge_workers(4, 48, "local[32]") == 4  # the default
-    assert effective_merge_workers(2, 48, "local[4]") == 2
-    # never more workers than touched tables
-    assert effective_merge_workers(8, 3, "local[32]") == 3
-    # multi-executor masters: the knob is the user's business
-    assert effective_merge_workers(8, 48, "spark://host:7077") == 8
-    assert effective_merge_workers(8, 48, "yarn") == 8
-    # local-cluster is MULTI-JVM (one executor process per worker): the
-    # single-JVM collapse does not apply, so no cap (ADVICE r12)
-    assert effective_merge_workers(8, 48, "local-cluster[2,4,1024]") == 8
-    # bare "local" and retry-suffixed forms are still single-JVM
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        assert effective_merge_workers(8, 48, "local") == 4
-        assert effective_merge_workers(8, 48, "local[4,2]") == 4
 
 
 def test_freshness_reports_lag_and_drains_to_fresh(spark, tmp_path):

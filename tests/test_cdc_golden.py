@@ -163,32 +163,3 @@ def test_checkpoint_store_roundtrip(spark, tmp_path):
     store.upsert("ds1", format_pos(200), sc="bank", tb="accounts")
     assert store.get_pos("ds1", "bank", "accounts") == format_pos(200)
     assert len(store.all()) == 2
-
-
-def test_collapse_skew_robust_parity(spark):
-    """The max_by hash-aggregate collapse (skew_robust=True) must return
-    exactly the window row_number collapse's rows — including delete
-    tombstones — and must plan as an aggregate (partial combine before
-    the exchange), not a window sort."""
-    from pyspark.sql import Row
-
-    from go_cdc_spark.operators.cdc import cdc_collapse
-
-    rng = random.Random(11)
-    rows = [
-        Row(
-            id=rng.randint(1, 20),
-            v=float(p),
-            pos=format_pos(p),
-            op=rng.choice(["insert", "update", "update", "delete"]),
-        )
-        for p in range(1, 120)
-    ]
-    changes = spark.createDataFrame(rows)
-    for keep in (False, True):
-        a = cdc_collapse(changes, ["id"], keep_deletes=keep)
-        b = cdc_collapse(changes, ["id"], keep_deletes=keep, skew_robust=True)
-        assert a.columns == b.columns
-        assert sorted(a.collect()) == sorted(b.collect())
-    plan = b._jdf.queryExecution().executedPlan().toString()
-    assert "max_by" in plan and "Window" not in plan

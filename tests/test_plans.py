@@ -30,6 +30,30 @@ def test_sim_topk_partial_topk_before_exchange(spark, sf_dir):
     assert final.start() < exchange.start() < partial.start(), plan
 
 
+def test_cdc_collapse_partial_top1_before_exchange(spark):
+    """The engine's MERGE collapse stays skew-safe: a Partial-mode
+    WindowGroupLimit BELOW the key exchange keeps one row per key per
+    map partition, so a hot key ships at most one row per partition
+    however many updates it gets."""
+    from pyspark.sql import functions as F
+
+    from go_cdc_spark.operators.cdc import cdc_collapse
+
+    changes = spark.range(2000).select(
+        (F.col("id") % 7).alias("k"),
+        F.lpad(F.col("id").cast("string"), 12, "0").alias("pos"),
+        F.lit("update").alias("op"),
+    )
+    plan = _physical(cdc_collapse(changes, ["k"], keep_deletes=True))
+    partial = re.search(r"WindowGroupLimit .*row_number\(\), 1, Partial", plan)
+    final = re.search(r"WindowGroupLimit .*row_number\(\), 1, Final", plan)
+    exchange = re.search(r"Exchange hashpartitioning\(k", plan)
+    assert partial, f"no Partial WindowGroupLimit in plan:\n{plan}"
+    assert final and exchange
+    # tree prints root-first: Final above the exchange, Partial below it
+    assert final.start() < exchange.start() < partial.start(), plan
+
+
 def test_sim_topk_scores_computed_before_shuffle(spark, sf_dir):
     """The cosine expression must be projected once, map-side (below the
     exchange) — re-deriving it above the shuffle would recompute the dot

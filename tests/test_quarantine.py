@@ -1,6 +1,6 @@
-"""Dead-letter quarantine: change events whose merge key fails to
-decode either quarantine durably (raw envelope preserved) or fail the
-batch — never silently vanish."""
+"""Poison change rows: an event whose value fails to decode to its
+column type fails the batch with an error naming the table — never
+silently vanishes."""
 
 from __future__ import annotations
 
@@ -14,61 +14,41 @@ from .test_streaming import _ev, _run_available, _snapshot, _write_segment
 SNAP = [(1, "alice", 10.0), (2, "bob", 20.0)]
 
 
-def _poison_segment(tmp_path):
-    seg = tmp_path / "segments"
+def _key_poison():
     bad = _ev("insert", 9, 115, name="ghost", balance="9.9", minute=2)
     bad["data"]["id"] = "not-a-number"  # key cannot decode to LongType
+    return bad
+
+
+def _non_key_poison():
+    bad = _ev("insert", 5, 117, name="eve", balance="9.9", minute=2)
+    bad["data"]["balance"] = "not-a-double"
+    return bad
+
+
+@pytest.mark.parametrize(
+    "poison", [_key_poison, _non_key_poison], ids=["key", "non_key"]
+)
+def test_poison_rows_fail_stop_without_quarantine(spark, tmp_path, poison):
+    bad = poison()
+    seg = tmp_path / "segments"
     _write_segment(seg, "seg1.json", [
         _ev("update", 1, 110, name="alice2", balance="11.0", minute=1),
         bad,
         _ev("insert", 4, 120, name="dave", balance="40.0", minute=3),
     ])
-    return seg
-
-
-def test_poison_rows_quarantine_and_batch_proceeds(spark, tmp_path):
-    seg = _poison_segment(tmp_path)
-    qpath = str(tmp_path / "dead_letter")
     mat = StreamingMaterializer(
         spark, _snapshot(spark, SNAP), ["id"], str(tmp_path / "state"),
-        pos_threshold=format_pos(100), quarantine_path=qpath,
+        pos_threshold=format_pos(100), table="accounts",
     )
-    _run_available(mat, spark, seg, tmp_path / "ckpt")
-    state = {r["id"]: r["name"] for r in mat.read_table().collect()}
-    assert state == {1: "alice2", 2: "bob", 4: "dave"}
-    dead = spark.read.parquet(qpath).collect()
-    assert len(dead) == 1
-    assert dead[0]["data"]["id"] == "not-a-number"  # raw envelope intact
-    assert dead[0]["pos"] == format_pos(115)
-
-
-def test_poison_rows_fail_stop_without_quarantine(spark, tmp_path):
-    seg = _poison_segment(tmp_path)
-    mat = StreamingMaterializer(
-        spark, _snapshot(spark, SNAP), ["id"], str(tmp_path / "state"),
-        pos_threshold=format_pos(100),
-    )
-    with pytest.raises(Exception, match="poison|StreamingQuery"):
+    with pytest.raises(Exception) as err:
         q = _run_available(mat, spark, seg, tmp_path / "ckpt")
         if q.exception() is not None:  # awaitTermination may swallow
             raise q.exception()
-
-
-def test_poison_non_key_value_quarantines(spark, tmp_path):
-    seg = tmp_path / "segments"
-    bad = _ev("insert", 5, 117, name="eve", balance="NaNopefully", minute=2)
-    bad["data"]["balance"] = "not-a-double"
-    _write_segment(seg, "seg1.json", [
-        _ev("update", 1, 110, name="alice2", balance="11.0", minute=1),
-        bad,
-    ])
-    qpath = str(tmp_path / "dead_letter")
-    mat = StreamingMaterializer(
-        spark, _snapshot(spark, SNAP), ["id"], str(tmp_path / "state"),
-        pos_threshold=format_pos(100), quarantine_path=qpath,
-    )
-    _run_available(mat, spark, seg, tmp_path / "ckpt")
+    msg = str(err.value)
+    assert "table 'accounts'" in msg
+    assert "a value does not decode to its column type" in msg
+    assert "quarantine_path" not in msg
+    # the batch failed whole: nothing of it reached the state
     state = {r["id"]: r["name"] for r in mat.read_table().collect()}
-    assert state == {1: "alice2", 2: "bob"}  # eve quarantined, not applied
-    dead = spark.read.parquet(qpath).collect()
-    assert len(dead) == 1 and dead[0]["data"]["balance"] == "not-a-double"
+    assert state == {1: "alice", 2: "bob"}

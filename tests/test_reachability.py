@@ -190,3 +190,47 @@ def test_name_allowlist_is_not_stale():
     for key in ALLOWED_UNREFERENCED:
         assert key in defs, f"{key} no longer exists"
         assert key not in refs, f"{key} is referenced now; drop it from the allowlist"
+
+
+def _top_level_names(path: Path) -> set[str]:
+    """Names a module binds at top level: defs, classes, assignment
+    targets and imports."""
+    names: set[str] = set()
+    for node in ast.parse(path.read_text(), filename=str(path)).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                names.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            for a in node.names:
+                names.add(a.asname or a.name.split(".")[0])
+    return names
+
+
+def test_tool_imports_resolve():
+    """Every ``from go_cdc_spark.X import name`` in ``tools/*.py`` (lazy
+    imports inside functions too) names a submodule of X or a name X
+    binds at top level, so deleting package code a tool still uses
+    fails here instead of at the tool's next run."""
+    broken = []
+    for tool in sorted((ROOT / "tools").glob("*.py")):
+        for node in ast.walk(ast.parse(tool.read_text(), filename=str(tool))):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.startswith(PKG) and _module_file(a.name) is None:
+                        broken.append(f"{tool.name}: import {a.name}")
+            elif isinstance(node, ast.ImportFrom) and not node.level:
+                mod = node.module or ""
+                if not (mod == PKG or mod.startswith(PKG + ".")):
+                    continue
+                src = _module_file(mod)
+                if src is None:
+                    broken.append(f"{tool.name}: no module {mod}")
+                    continue
+                bound = _top_level_names(src)
+                for a in node.names:
+                    if a.name not in bound and _module_file(f"{mod}.{a.name}") is None:
+                        broken.append(f"{tool.name}: {mod}.{a.name}")
+    assert broken == [], f"tool imports that no longer resolve: {broken}"
