@@ -944,7 +944,8 @@ class Engine:
                 for tb in sorted(os.listdir(scdir)):
                     p = os.path.join(scdir, tb)
                     # skip sidecars: {table}.pending (txn gate),
-                    # {table}.aliases.json, storeio tmp dirs
+                    # {table}.runs (delta runs), {table}.aliases.json,
+                    # storeio tmp dirs
                     if os.path.isdir(p) and "." not in tb:
                         out.append((sc, tb))
         return out

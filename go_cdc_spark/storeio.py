@@ -12,6 +12,14 @@ SCD2 interval derivation) pass ``batch_id`` so the swap stamps the
 applied batch atomically with the state (``_applied_batch.json`` is
 written into the tmp dir BEFORE the rename; parquet readers ignore
 underscore files), and skip any batch at or below the stamp on replay.
+
+Merge-on-read stores (the materializer's state) add delta RUNS beside
+the base: each run is its own dir under ``{path}.runs/``, written once
+through :func:`swap_in` under a name that is never reused
+(:func:`append_run`). A compaction swaps a new base in whose
+``_folded_runs.json`` names the runs it folded, then deletes them
+(:func:`sweep_runs`); a crash between the two leaves runs that
+:func:`runs` no longer lists and :func:`recover` deletes.
 """
 
 from __future__ import annotations
@@ -19,11 +27,14 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid as uuidlib
 
 from pyspark.sql import DataFrame
 
 _MARKER = "_applied_batch.json"
+_FOLDED = "_folded_runs.json"
+RUNS_SUFFIX = ".runs"
 
 
 def _read_stamp(path: str) -> dict | None:
@@ -70,6 +81,7 @@ def swap_in(
     batch_id: int | None = None,
     keep_stamp: bool = False,
     run_id: str | None = None,
+    folded: list[str] | None = None,
 ) -> None:
     """Atomically replace the parquet dir at ``path`` with ``df``.
 
@@ -80,7 +92,9 @@ def swap_in(
     forward for out-of-band rewrites (repair/compaction) that must not
     reopen the replay window. Crash before the rename → old state + old
     stamp (replay folds once); crash after → new stamp (replay
-    skipped)."""
+    skipped). ``folded`` names the runs a compaction folded into
+    ``df``; the manifest lands atomically with the new base, so those
+    runs stop being live at the rename."""
     stamp: dict | None = None
     if batch_id is not None:
         stamp = {"batch_id": batch_id}
@@ -93,7 +107,50 @@ def swap_in(
     if stamp is not None:
         with open(os.path.join(tmp, _MARKER), "w") as f:
             json.dump(stamp, f)
+    if folded:
+        with open(os.path.join(tmp, _FOLDED), "w") as f:
+            json.dump(folded, f)
     promote_tmp(tmp, path)
+
+
+def append_run(df: DataFrame, path: str) -> None:
+    """Write ``df`` as a new delta run of the store at ``path``. The
+    name is never reused — batch ids restart under a new checkpoint, so
+    a batch-named run could overwrite a live one; a replayed batch adds
+    a duplicate run instead, which a latest-wins read absorbs."""
+    name = f"run-{time.time_ns():020d}-{uuidlib.uuid4().hex[:8]}"
+    swap_in(df, os.path.join(path + RUNS_SUFFIX, name))
+
+
+def runs(path: str) -> list[str]:
+    """The live delta runs of the store at ``path``: run dirs that are
+    neither a torn write (``.tmp-`` leftover) nor named in the base's
+    fold manifest. No base, no live run."""
+    d = path + RUNS_SUFFIX
+    if not os.path.isdir(path) or not os.path.isdir(d):
+        return []
+    try:
+        with open(os.path.join(path, _FOLDED)) as f:
+            folded = set(json.load(f))
+    except (OSError, ValueError):
+        folded = set()
+    return sorted(
+        os.path.join(d, n)
+        for n in os.listdir(d)
+        if "." not in n and n not in folded
+    )
+
+
+def sweep_runs(path: str) -> None:
+    """Delete every run dir of ``path`` that :func:`runs` does not list:
+    folded runs and torn run writes."""
+    d = path + RUNS_SUFFIX
+    if not os.path.isdir(d):
+        return
+    live = set(runs(path))
+    for run in (os.path.join(d, n) for n in os.listdir(d)):
+        if run not in live:
+            shutil.rmtree(run, ignore_errors=True)
 
 
 def _require_local(path: str) -> None:
@@ -149,10 +206,12 @@ def _siblings(path: str, kind: str) -> list[str]:
 
 def recover(path: str) -> None:
     """Promote a demoted ``.old-`` store back if a torn swap left no
-    live dir; sweep stale ``.tmp-``/``.old-`` leftovers either way."""
+    live dir; sweep stale ``.tmp-``/``.old-`` leftovers and dead runs
+    either way."""
     olds = _siblings(path, "old")
     if not os.path.exists(path) and olds:
         os.rename(olds[-1], path)
         olds = olds[:-1]
     for stale in olds + _siblings(path, "tmp"):
         shutil.rmtree(stale, ignore_errors=True)
+    sweep_runs(path)

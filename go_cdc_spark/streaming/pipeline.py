@@ -19,7 +19,10 @@ conversion. In Spark, all the hard parts are the runtime's:
   only sink logs to console): ``foreachBatch`` MERGE into a parquet
   state table that keeps per-row ``__pos`` (late or redelivered events
   lose latest-wins) and delete tombstones (so a late pre-delete image
-  cannot resurrect a deleted row).
+  cannot resurrect a deleted row). The MERGE is merge-on-read: a batch
+  appends only its collapsed delta as a run, reads apply latest-wins
+  over base ∪ runs, and a compaction folds the runs into the base
+  (Krypton, VLDB 2023) — upkeep follows the change, not the table.
 """
 
 from __future__ import annotations
@@ -39,6 +42,16 @@ from ..sources.meta import CheckpointStore
 
 POS_COL = "__pos"
 OP_COL = "__op"
+ROW_OPS = ("insert", "update", "delete")
+# compaction trigger: a batch that would leave more than MAX_RUNS runs,
+# or arrives when the runs hold as many bytes as the base, folds them
+MAX_RUNS = 8
+
+
+def _bytes(dirs: list[str]) -> int:
+    return sum(
+        e.stat().st_size for d in dirs for e in os.scandir(d) if e.is_file()
+    )
 
 
 def read_changelog_stream(
@@ -60,11 +73,30 @@ def read_changelog_stream(
 class StreamingMaterializer:
     """foreachBatch MERGE of a changelog stream into a queryable table.
 
-    State layout: the target table's typed columns + ``__pos`` (position
-    of the image) + ``__op`` (last op; delete rows are retained as
-    tombstones and filtered from the read view). The merge is
-    latest-wins on max(__pos) per key — idempotent under redelivery and
-    correct under cross-batch reordering.
+    State layout: a base parquet dir at ``state_path`` plus delta runs,
+    one dir each under the sibling ``state_path + ".runs/"`` (not under
+    the base: parquet partition discovery rejects non-``k=v`` subdirs).
+    Base and runs share one schema: the target table's typed columns +
+    ``__pos`` (position of the image) + ``__op`` (last op; delete rows
+    are retained as tombstones and filtered from the read view).
+    :meth:`state` is latest-wins on max(__pos) per key over base ∪ runs.
+
+    A batch writes ``cdc_collapse(delta)`` as a new run. It compacts
+    instead — base ∪ runs ∪ delta collapsed into a new base, then the
+    folded runs deleted — when it would leave more than ``MAX_RUNS``
+    runs, when the runs already hold as many bytes as the base, or when
+    it carries DDL (the stored rows change shape, so they are folded
+    under one schema). A read thus scans the base plus at most
+    ``MAX_RUNS`` runs, which hold under the base's bytes plus one
+    batch's delta.
+
+    Replay: a redelivered batch appends a duplicate run (run names are
+    never reused) whose rows tie the originals on ``__pos`` with the
+    same images, so latest-wins absorbs it — the sink is idempotent
+    without a replay stamp. A crash between a compaction's base swap
+    and its run deletion leaves runs the new base's manifest names;
+    they are no longer read, and are swept by the next compaction or
+    init (``storeio.recover``).
     """
 
     def __init__(
@@ -87,6 +119,7 @@ class StreamingMaterializer:
         self.data_source_id = data_source_id
         self.table = table
         self._run_id: str | None = None  # set by start(); see applied_batch
+        self._base_schema: T.StructType | None = None  # read lazily
         self._pending_renames: dict[str, tuple[str, object]] = {}
         # ADD COLUMN ... DEFAULT backfill: pending = this batch's state
         # rewrite, persisted defaults = decode fallback for late events
@@ -128,15 +161,38 @@ class StreamingMaterializer:
             ).withColumn(OP_COL, F.lit("insert"))
             init.write.mode("overwrite").parquet(state_path)
         else:
-            # restart: the persisted state is the schema authority — it
+            # restart: the persisted base is the schema authority — it
             # carries any DDL evolution applied since the snapshot, which
-            # the caller's snapshot frame predates
-            self.schema = self.state().drop(POS_COL, OP_COL).schema
+            # the caller's snapshot frame predates; runs always share the
+            # base's schema (DDL compacts), so only its footer is read
+            self._base_schema = self.spark.read.parquet(state_path).schema
+            self.schema = T.StructType(
+                [f for f in self._base_schema if f.name not in (POS_COL, OP_COL)]
+            )
 
     # -- state access ----------------------------------------------------
 
+    def _stored(self, runs: list[str]) -> DataFrame:
+        """Base ∪ ``runs``, not collapsed: one scan under the base's
+        schema, which every run shares."""
+        if not runs:
+            return self.spark.read.parquet(self.state_path)
+        if self._base_schema is None:
+            self._base_schema = self.spark.read.parquet(self.state_path).schema
+        return self.spark.read.schema(self._base_schema).parquet(
+            self.state_path, *runs
+        )
+
     def state(self) -> DataFrame:
-        return self.spark.read.parquet(self.state_path)
+        """The latest image per key, tombstones included: the base alone,
+        or latest-wins over base ∪ live runs."""
+        runs = storeio.runs(self.state_path)
+        if not runs:
+            return self._stored(runs)
+        return cdc_collapse(
+            self._stored(runs), self.keys, pos_col=POS_COL, op_col=OP_COL,
+            keep_deletes=True,
+        )
 
     def read_table(self) -> DataFrame:
         """The queryable current state (tombstones hidden)."""
@@ -259,12 +315,12 @@ class StreamingMaterializer:
             chain.append(cur)
         return chain
 
-    def _aligned_state(self) -> DataFrame:
-        """Current state projected to the (possibly evolved) schema:
-        added columns surface as typed NULLs on pre-DDL rows, dropped
-        columns vanish. Pure projection — no rewrite until the merge
-        write that follows anyway."""
-        state = self.state()
+    def _aligned_state(self, runs: list[str]) -> DataFrame:
+        """Stored rows (base ∪ ``runs``) projected to the (possibly
+        evolved) schema: added columns surface as typed NULLs on pre-DDL
+        rows, dropped columns vanish. Pure projection — no rewrite until
+        the compaction write that follows anyway."""
+        state = self._stored(runs)
         have = set(state.columns)
         new_from_old = {
             new: old for old, (new, _t) in self._pending_renames.items()
@@ -297,13 +353,13 @@ class StreamingMaterializer:
             *[col_for(f) for f in self.schema.fields], POS_COL, OP_COL
         )
 
-    def _reject_poison(self, rows: DataFrame) -> None:
-        """Fail the batch on poison rows: an event carrying ANY value
-        that does not decode to its column type (detected via try_cast).
-        Under ANSI mode (Spark 4 default) one such row would abort the
-        micro-batch anyway, and for a merge key there is no sane
-        fallback at all; raising here names the table instead —
-        fail-stop beats silent loss."""
+    def _poison(self):
+        """True on a row event carrying ANY value that does not decode
+        to its column type (detected via try_cast). Under ANSI mode
+        (Spark 4 default) one such row would abort the micro-batch
+        anyway, and for a merge key there is no sane fallback at all;
+        failing the batch names the table instead — fail-stop beats
+        silent loss."""
         poison = F.lit(False)
         for f in self.schema.fields:
             if isinstance(f.dataType, T.BinaryType):
@@ -314,49 +370,92 @@ class StreamingMaterializer:
             if f.name in self.keys:
                 raw = F.coalesce(raw, F.col("before").getItem(f.name))
             poison = poison | (raw.isNotNull() & raw.try_cast(f.dataType).isNull())
-        if rows.filter(poison).limit(1).count():
+        return F.col("op").isin(*ROW_OPS) & poison
+
+    def _reject_poison(self, n: int) -> None:
+        if n:
             raise ValueError(
                 f"poison change rows for table {self.table or self.state_path!r}: "
                 "a value does not decode to its column type"
             )
 
+    def _control(self, changes: DataFrame):
+        """The batch's control figures in ONE aggregate: DDL events, row
+        events, poison rows (under the current schema) and max(pos)."""
+        return changes.agg(
+            F.count(F.when(F.col("op") == "ddl", 1)).alias("ddl"),
+            F.count(F.when(F.col("op").isin(*ROW_OPS), 1)).alias("rows"),
+            F.count(F.when(self._poison(), 1)).alias("poison"),
+            F.max("pos").alias("top"),
+        ).first()
+
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         changes = batch
         if self.pos_threshold is not None:
             changes = changes.filter(F.col("pos") > F.lit(self.pos_threshold))
-        self._apply_ddl(changes)
-        rows = changes.filter(F.col("op").isin("insert", "update", "delete"))
-        self._reject_poison(rows)
-        typed = self._typed_changes(rows)
+        ctl = self._control(changes)
+        poison = ctl.poison
+        if ctl.ddl:
+            self._apply_ddl(changes)
+            # a retyped or added column changes what decodes
+            poison = changes.filter(self._poison()).limit(1).count()
+        self._reject_poison(poison)
+        typed = self._typed_changes(changes.filter(F.col("op").isin(*ROW_OPS)))
+        if ctl.ddl or self._pending_renames or self._pending_defaults:
+            # the stored rows change shape: fold them under one schema
+            self._compact(typed)
+        elif ctl.rows:
+            runs = storeio.runs(self.state_path)
+            if len(runs) >= MAX_RUNS or _bytes(runs) >= _bytes([self.state_path]):
+                self._compact(typed)
+            else:
+                storeio.append_run(
+                    cdc_collapse(
+                        typed, self.keys, pos_col=POS_COL, op_col=OP_COL,
+                        keep_deletes=True,  # tombstones persist in state
+                    ),
+                    self.state_path,
+                )
+        self._advance_meta(ctl.top)
+
+    def _compact(self, typed: DataFrame) -> None:
+        """Fold base ∪ live runs ∪ this batch's delta into a new base,
+        then delete the folded runs. A crash between the swap and the
+        delete leaves runs the new base's manifest names: no longer
+        live, swept here or by the next init."""
+        storeio.sweep_runs(self.state_path)  # a crashed compaction's runs
+        runs = storeio.runs(self.state_path)
         merged = cdc_collapse(
-            self._aligned_state().unionByName(typed),
+            self._aligned_state(runs).unionByName(typed),
             self.keys,
             pos_col=POS_COL,
             op_col=OP_COL,
             keep_deletes=True,  # tombstones persist in state
         )
-        storeio.swap_in(merged, self.state_path)
+        storeio.swap_in(
+            merged, self.state_path, keep_stamp=True,
+            folded=[os.path.basename(r) for r in runs],
+        )
+        storeio.sweep_runs(self.state_path)
+        self._base_schema = None  # the new base may carry a new schema
         self._pending_renames = {}  # the write persisted the new names
         self._pending_defaults = {}  # backfill is one-time, now in state
-        self._advance_meta(changes)
 
-    def _advance_meta(self, changes: DataFrame) -> None:
+    def _advance_meta(self, top: str | None) -> None:
         """A21: advance the per-table watermark to the batch max pos —
         monotone, so a stale replay can never REGRESS the watermark
         (upsert itself is last-write-wins)."""
-        if self.meta is None:
+        if self.meta is None or top is None:
             return
-        top = changes.agg(F.max("pos").alias("p")).first().p
-        if top is not None:
-            cur = self.meta.get_pos(self.data_source_id, sc=None, tb=self.table)
-            if cur is None or top > cur:
-                self.meta.upsert(
-                    self.data_source_id,
-                    top,
-                    sc=None,
-                    tb=self.table,
-                    sync_type="incremental",
-                )
+        cur = self.meta.get_pos(self.data_source_id, sc=None, tb=self.table)
+        if cur is None or top > cur:
+            self.meta.upsert(
+                self.data_source_id,
+                top,
+                sc=None,
+                tb=self.table,
+                sync_type="incremental",
+            )
 
     def start(self, changes_stream: DataFrame, checkpoint_dir: str, query_name: str = "materialize"):
         # replay-guarded subclasses stamp state with this run identity so

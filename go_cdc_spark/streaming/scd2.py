@@ -13,8 +13,9 @@ ordered-event contract (pos = binlog position, A17/A21).
 Scale shape per batch: closed intervals are IMMUTABLE — they never
 ride through the merge again (at 100 TB the history table partitions
 by date(valid-from) and closed partitions are never rewritten; this
-parquet-swap implementation rewrites for the same reason
-StreamingMaterializer does — no transactional format in-container).
+parquet-swap implementation rewrites the history on every batch —
+StreamingMaterializer's append-only delta runs do not carry over, as a
+batch event closes an interval that is already stored).
 The interval recomputation windows over (open intervals ∪ batch
 events) only, keyed by entity — one shuffle proportional to live
 entities + batch size, never to history length.
@@ -27,7 +28,7 @@ from pyspark.sql.window import Window
 
 from .. import storeio
 from ..sources.changelog import OP_DELETE
-from .pipeline import OP_COL, POS_COL, StreamingMaterializer
+from .pipeline import OP_COL, POS_COL, ROW_OPS, StreamingMaterializer
 
 VF_COL = "__valid_from_pos"
 VT_COL = "__valid_to_pos"
@@ -101,6 +102,7 @@ class Scd2Materializer(StreamingMaterializer):
         changes = batch
         if self.pos_threshold is not None:
             changes = changes.filter(F.col("pos") > F.lit(self.pos_threshold))
+        ctl = self._control(changes)
         applied = storeio.applied_batch(
             self.state_path, run_id=getattr(self, "_run_id", None)
         )
@@ -111,10 +113,10 @@ class Scd2Materializer(StreamingMaterializer):
             # later run deriving pos_threshold from meta would re-admit
             # those events and duplicate interval history. upsert is
             # idempotent (keyed, max-pos), so advancing it here is safe.
-            self._advance_meta(changes)
+            self._advance_meta(ctl.top)
             return
-        rows = changes.filter(F.col("op").isin("insert", "update", "delete"))
-        self._reject_poison(rows)
+        self._reject_poison(ctl.poison)
+        rows = changes.filter(F.col("op").isin(*ROW_OPS))
         # within-batch redelivery guard
         typed = self._typed_changes(rows).dropDuplicates([*self.keys, POS_COL])
         state = self.state()
@@ -158,4 +160,4 @@ class Scd2Materializer(StreamingMaterializer):
             .select(*fields, F.col(POS_COL).alias(VF_COL), VT_COL)
         )
         self._swap_state(closed_rows.unionByName(recomputed), batch_id=batch_id)
-        self._advance_meta(changes)
+        self._advance_meta(ctl.top)

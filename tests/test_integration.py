@@ -253,14 +253,14 @@ def _snap_accounts(spark):
     return spark.createDataFrame([], "id long, v string")
 
 
-def _run_materializer(spark, tmp_path, tag, cls=StreamingMaterializer):
+def _run_materializer(spark, tmp_path, tag, cls=StreamingMaterializer, snap=None):
     seg = tmp_path / f"segments_{tag}"
     base = time.time() - 100
     for i, (name, events) in enumerate(_SEGMENTS):
         _write_seg(seg, name, events, mtime=base + 10 * i)
     meta = CheckpointStore(spark, str(tmp_path / f"meta_{tag}"))
     mat = cls(
-        spark, _snap_accounts(spark), keys=["id"],
+        spark, _snap_accounts(spark) if snap is None else snap, keys=["id"],
         state_path=str(tmp_path / f"state_{tag}"),
         pos_threshold=format_pos(100), meta=meta, table="accounts",
     )
@@ -437,3 +437,158 @@ def test_materializer_hot_key_converges(spark, tmp_path):
     q.stop()
     got = {r.r_regionkey: r.r_name for r in mat.read_table().collect()}
     assert got[2] == "ASIA-v29" and got[77] == "LEMURIA" and 0 not in got
+
+
+# ---------------------------------------------------------------------------
+# Merge-on-read state: a batch appends its collapsed delta as a run beside
+# the base; a compaction folds the runs into a new base, then deletes them.
+# ---------------------------------------------------------------------------
+
+from go_cdc_spark import storeio
+from go_cdc_spark.streaming.pipeline import MAX_RUNS
+
+
+def _big_snap(spark, n):
+    """``n`` snapshot rows (ids 1000..): a base far larger than any
+    one-segment run, so batches append runs instead of compacting."""
+    return spark.range(1000, 1000 + n).select(
+        "id", F.concat(F.lit("s"), F.col("id").cast("string")).alias("v")
+    )
+
+
+def _table(mat):
+    return {(r.id, r.v) for r in mat.read_table().collect()}
+
+
+def test_crash_between_run_write_and_checkpoint_commit(spark, tmp_path):
+    """Batch 1 lands as a run, then the process dies before the
+    streaming commit: the restart redelivers batch 1, which adds a
+    duplicate run under a new name, and converges to the clean run."""
+    snap = _big_snap(spark, 2000)
+    mat_clean, meta_clean, _, crashed = _run_materializer(
+        spark, tmp_path, "rclean", snap=snap
+    )
+    assert not crashed
+    want = _table(mat_clean)
+    want_pos = meta_clean.get_pos("ds1", None, "accounts")
+    assert {(1, "a2"), (2, "b-again"), (3, "c2")} <= want
+    assert len(storeio.runs(mat_clean.state_path)) == 3  # no compaction
+
+    _, _, seg, crashed = _run_materializer(
+        spark, tmp_path, "rcrash", cls=_CrashAfterWrite, snap=snap
+    )
+    assert crashed
+    state_path = str(tmp_path / "state_rcrash")
+    assert len(storeio.runs(state_path)) == 2  # batches 0 and 1, as runs
+
+    meta_r = CheckpointStore(spark, str(tmp_path / "meta_rcrash"))
+    mat_r = StreamingMaterializer(
+        spark, snap, keys=["id"], state_path=state_path,
+        pos_threshold=format_pos(100), meta=meta_r, table="accounts",
+    )
+    stream = read_changelog_stream(spark, str(seg), max_files_per_trigger=1)
+    mat_r.start(stream, str(tmp_path / "ckpt_rcrash")).awaitTermination(120)
+
+    assert _table(mat_r) == want
+    assert meta_r.get_pos("ds1", None, "accounts") == want_pos
+    assert len(storeio.runs(state_path)) == 4  # batch 1's replay is a new run
+
+
+def _batches(spark):
+    return [changelog_df(spark, evs) for _, evs in _SEGMENTS]
+
+
+def test_crash_between_compaction_swap_and_run_delete(spark, tmp_path, monkeypatch):
+    """A compaction swaps its new base in, then dies before deleting the
+    runs it folded. The new base's manifest names them, so they are no
+    longer read; the redelivered batch and the next one apply on top,
+    and a restart sweeps the leftovers."""
+    b0, b1, b2 = _batches(spark)
+    clean = StreamingMaterializer(
+        spark, _snap_accounts(spark), keys=["id"],
+        state_path=str(tmp_path / "clean"), table="accounts",
+    )
+    for i, b in enumerate((b0, b1, b2)):
+        clean.process_batch(b, i)
+    want = _table(clean)
+    assert want == {(1, "a2"), (2, "b-again"), (3, "c2")}
+
+    path = str(tmp_path / "state")
+    mat = StreamingMaterializer(
+        spark, _snap_accounts(spark), keys=["id"], state_path=path,
+        table="accounts",
+    )
+    mat.process_batch(b0, 0)
+    assert len(storeio.runs(path)) == 1  # the empty base: next batch compacts
+
+    real_swap = storeio.swap_in
+
+    def crash_after_base_swap(df, target, *a, **kw):
+        real_swap(df, target, *a, **kw)
+        if target == path:
+            raise RuntimeError("injected crash: base swapped, runs not deleted")
+
+    monkeypatch.setattr(storeio, "swap_in", crash_after_base_swap)
+    try:
+        mat.process_batch(b1, 1)
+        raise AssertionError("injected crash did not surface")
+    except RuntimeError:
+        pass
+    monkeypatch.setattr(storeio, "swap_in", real_swap)
+
+    runs_dir = path + storeio.RUNS_SUFFIX
+    assert len(os.listdir(runs_dir)) == 1  # the folded run is still there ...
+    assert storeio.runs(path) == []  # ... but no longer live
+    assert _table(mat) == {(1, "a2"), (3, "c")}  # the state after batch 1
+
+    mat.process_batch(b1, 1)  # redelivery of the uncommitted batch
+    mat.process_batch(b2, 2)
+    assert _table(mat) == want
+
+    restarted = StreamingMaterializer(
+        spark, _snap_accounts(spark), keys=["id"], state_path=path,
+        table="accounts",
+    )
+    assert _table(restarted) == want
+    live = {os.path.basename(r) for r in storeio.runs(path)}
+    assert set(os.listdir(runs_dir)) == live  # init swept the leftover
+
+
+def test_runs_stay_bounded_and_reads_are_latest_wins(spark, tmp_path):
+    """Twenty single-row batches, delivered out of position order: at
+    most MAX_RUNS runs exist after any batch, and the state read equals
+    a latest-wins fold in Python, tombstones included. A DDL batch
+    compacts and leaves no run."""
+    n = 3000
+    path = str(tmp_path / "state")
+    mat = StreamingMaterializer(
+        spark, _big_snap(spark, n), keys=["id"], state_path=path,
+        table="accounts",
+    )
+    # key -> (pos, v, op); the snapshot rows sit at pos "" (below all)
+    want = {i: ("", f"s{i}", "insert") for i in range(1000, 1000 + n)}
+    order = [7, 2, 15, 0, 11, 19, 4, 9, 13, 1, 17, 6, 3, 18, 10, 5, 14, 8, 16, 12]
+    counts = []
+    for batch_id, k in enumerate(order):
+        key = 1000 + (k % 5) if k % 3 else 90_000 + k % 4  # overlapping keys
+        op = ("insert", "update", "update", "delete")[k % 4]
+        pos = format_pos(500 + k)
+        ev = _acct_ev(op, key, 500 + k, v=f"v{k}")
+        mat.process_batch(changelog_df(spark, [ev]), batch_id)
+        if key not in want or pos > want[key][0]:
+            want[key] = (pos, None if op == "delete" else f"v{k}", op)
+        counts.append(len(storeio.runs(path)))
+        assert counts[-1] <= MAX_RUNS
+        got = {r["id"]: (r["__pos"], r["v"], r["__op"]) for r in mat.state().collect()}
+        assert got == want, batch_id
+    assert max(counts) == MAX_RUNS and 0 in counts  # the count rule fired
+    live = {k: (v,) for k, (_, v, op) in want.items() if op != "delete"}
+    assert {r.id: (r.v,) for r in mat.read_table().collect()} == live
+
+    ddl = _acct_ev("ddl", 0, 900)
+    ddl["data"] = {"query": "ALTER TABLE accounts ADD COLUMN note varchar(40)"}
+    mat.process_batch(changelog_df(spark, [ddl]), len(order))
+    assert storeio.runs(path) == []
+    out = mat.read_table()
+    assert "note" in out.columns
+    assert {r.id: (r.v,) for r in out.collect()} == live
