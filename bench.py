@@ -4,11 +4,16 @@
 Runs a representative slice of the operator surface — scan/filter, agg,
 every join family, window, top-k, CDC collapse, dedup (exact + MinHash
 LSH), similarity top-k, text stats — at ``$SPARK_GRAFT_SF_DIR`` (default
-sf0.1, ~600k lineitem) on ``local[$SPARK_GRAFT_CPUS]``, and prints ONE
-JSON line::
+sf0.1, ~600k lineitem) on ``local[$SPARK_GRAFT_CPUS]``, and prints two
+JSON lines: a ``headline_queries_detail`` line with every query, then a
+summary line short enough for a 2,000-character stdout tail::
 
     {"metric": "headline_queries_total", "value": <sum sec>,
-     "unit": "sec", "queries": {name: sec, ...}, "sf": 0.1}
+     "unit": "sec", "queries": {name: sec, ...}, "sf": 0.1, ...}
+
+It times queries only. The engine loop (snapshot, changelog drain,
+restart, binlog catch-up) is measured by ``perfbench`` ``sync_bulk``,
+and polling capture by ``tools/capture_bench.py``.
 
 Each query executes fully through the noop sink (whole plan runs,
 nothing collected to the driver — the fair way to time a distributed
@@ -372,12 +377,7 @@ def vs_prev(times: dict[str, float], priors: list[dict]) -> dict:
 _TAIL_BUDGET = 1600  # chars for the final line, < the driver's 2,000 tail
 
 
-def emit_lines(
-    times: dict[str, float],
-    sf: float,
-    comparison: dict,
-    engine_summary: dict | None = None,
-) -> list[str]:
+def emit_lines(times: dict[str, float], sf: float, comparison: dict) -> list[str]:
     """Detail line (full queries map + ratios) followed by a compact
     summary line that fits the driver's tail capture.
 
@@ -394,8 +394,6 @@ def emit_lines(
         "sf": sf,
         "vs_prev": comparison,
     }
-    if engine_summary is not None:
-        detail["engine_end_to_end"] = engine_summary
     ratios = comparison.get("ratios") or {}
     mean_ratio = round(sum(ratios.values()) / len(ratios), 3) if ratios else None
     slowest = sorted(times.items(), key=lambda kv: -kv[1])
@@ -423,8 +421,6 @@ def emit_lines(
                 "regressions": regs,
             },
         }
-        if engine_summary is not None:
-            out["engine_end_to_end"] = engine_summary
         return out
 
     k = len(times)
@@ -515,36 +511,6 @@ def main() -> None:
             t = min([t] + [run_one(spark, name, sf_dir) for _ in range(3)])
         times[name] = round(t, 3)
 
-    # End-to-end engine loop (snapshot -> drain -> restart -> readback),
-    # same SparkSession — its summary rides the parseable tail so rounds
-    # compare from BENCH_r{N}.json alone (VERDICT r9 #7). Guarded: the
-    # query bench must still emit if the engine loop breaks.
-    engine_summary = None
-    engine_regressed = False
-    try:
-        sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
-        import engine_bench
-
-        er = engine_bench.run(spark, sf_dir=sf_dir)
-        engine_summary = {
-            "full_sync_rows_s": er["full_sync"]["rows_per_s"],
-            "drain_ev_s": er["incremental"]["events_per_s"],
-            "restart_s": er["restart_recovery"]["seconds"],
-            "readback_ok": er["readback"]["verified"],
-            "total_s": er["value"],
-        }
-        engine_bench._regression_guard(er)  # appends ENGINE_BENCH.jsonl
-    except SystemExit:
-        # the guard found an engine regression: record it on the summary
-        # and keep going — the per-query bench lines (minutes of already-
-        # computed data) must still emit; exit non-zero AFTER printing,
-        # the same print-then-exit pattern the query gate uses (ADVICE r10)
-        engine_regressed = True
-        if engine_summary is not None:
-            engine_summary["regressed"] = True
-    except Exception as exc:  # noqa: BLE001 — bench must still report
-        engine_summary = {"error": str(exc)[:200]}
-
     comparison = vs_prev(times, priors)
     if comparison["regressions"]:
         # Fresh-session arbitration (round 11): a ~100-query shared
@@ -567,22 +533,16 @@ def main() -> None:
                 times[name] = round(t, 3)
         comparison = vs_prev(times, priors)
         comparison["fresh_retest"] = fresh
-    for line in emit_lines(times, sf, comparison, engine_summary):
+    for line in emit_lines(times, sf, comparison):
         print(line)
     if spark is not None:
         spark.stop()
-    failed = False
     if comparison["regressions"]:
         # fail loudly: a >1.3× per-query regression is a build defect
         print(
             f"REGRESSION vs previous round: {comparison['regressions']}",
             file=sys.stderr,
         )
-        failed = True
-    if engine_regressed:
-        print("ENGINE REGRESSION (see ENGINE_BENCH.jsonl)", file=sys.stderr)
-        failed = True
-    if failed:
         sys.exit(1)
 
 

@@ -737,12 +737,6 @@ class Engine:
                 ckpt = os.path.join(
                     self.config.checkpoint_dir, f"src{holder.id}", "_demux"
                 )
-                for mat in mats.values():
-                    # replay-guard stamp parity with mat.start(): state
-                    # stamps carry the DEMUX checkpoint identity, so a
-                    # re-pointed checkpoint (batch ids restart at 0)
-                    # cannot silently skip batches
-                    mat._run_id = ckpt
 
                 def demux_batch(batch, batch_id: int) -> None:
                     batch = batch.persist()
@@ -777,8 +771,9 @@ class Engine:
                         # per-table state dirs are disjoint and the meta
                         # store upsert holds its own lock. Failure semantics
                         # match the sequential loop: the first raise fails
-                        # the batch, the replayed batch skips tables whose
-                        # applied-batch stamp already advanced.
+                        # the batch, and the replayed batch re-applies every
+                        # touched table: a duplicate run (or a compaction
+                        # folding it) that latest-wins absorbs.
                         # 4 workers: the probed optimum at 48 tables on
                         # local[32]; 8 ran at 0.29x sequential (SCALE.md
                         # round-11).

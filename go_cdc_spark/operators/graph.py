@@ -378,9 +378,10 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial set-union bounds what shuffles at the distinct
     item count); the valve is a size() filter and the pair explode is
     map-side off the sorted array, so no second pass and no self-join
-    remain (plans/r13/copurchase_pairs_{before,after}.txt)."""
+    remain. The plan this replaced read lineitem twice, through two
+    l_orderkey exchanges, a count(1) valve Window and a self-join."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # r14 probe (tools/basket_valve_probe.py, VERDICT r13 #6): does a
+    # r14 probe (interleaved min-of-3, VERDICT r13 #6): does a
     # mega-basket fill the collect_set buffer before the valve prunes?
     # Measured with a synthetic 200k-distinct-part order injected:
     # current shape 1.10s == no-giant baseline 1.10s (the one ~1.6 MB
@@ -395,7 +396,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the m(m-1)/2 pair rows explode MAP-SIDE from the sorted item
     # array (x < y by construction) instead of through a joined pass.
     # Same single l_orderkey exchange as before; the window pass and
-    # the self-join pass are gone (plans/r13/copurchase_pairs_*.txt).
+    # the self-join pass are gone from the plan.
     baskets = (
         li.groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("items"))

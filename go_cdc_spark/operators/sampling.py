@@ -207,8 +207,8 @@ def dsir_select(
         F.sum(F.when(~is_ref, 1).otherwise(0)).cast("bigint").alias("r_b"),
     # LAZY persist: both `tot` and `w` derive from counts; without it
     # the totals' broadcast re-runs the corpus-proportional token scan
-    # (3 corpus passes where 2 suffice — visible as a third Scan
-    # parquet in EXPLAIN.md before this pin)
+    # (3 corpus passes where 2 suffice — the formatted plan showed a
+    # third Scan parquet before this pin)
     ).persist()
     _PINNED.append(counts)
     tot = counts.agg(

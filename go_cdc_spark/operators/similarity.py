@@ -610,7 +610,7 @@ def _coarse_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     8 candidates per vector; every consumer filters rn ≤ {_IVF_NPROBE},
     so a map-side top-2 fold over the one-row broadcast centroid array
     computes the identical (centroid_id, rn) pairs with ZERO exchange
-    (plans/r13/sim_ivf_*.txt: Exchange+Sort+Window → pure Project).
+    (in the r13 plans the Exchange+Sort+Window became a pure Project).
     Tie-break (cos desc, centroid_id asc) and the per-candidate cosine
     expression are unchanged, so assignments are bit-identical."""
     emb = load(spark, sf_dir, "embeddings").withColumn(
@@ -2301,9 +2301,8 @@ FROM rscored WHERE rn <= {TOP_K}
 
 
 
-# Tuned PQ arm (VERDICT r9 #3): the (m, k, rounds) point the
-# tools/pq_tune_probe.py sweep found clearing recall@5 >= 0.5 at BOTH
-# fixture SFs — m=16 subspaces (subdim 4), k=128 codewords, 2 Lloyd
+# Tuned PQ arm (VERDICT r9 #3): the (m, k, rounds) point a sweep found
+# clearing recall@5 >= 0.5 at BOTH fixture SFs — m=16 subspaces (subdim 4), k=128 codewords, 2 Lloyd
 # rounds: measured 0.616 @ sf0.01 / 0.503 @ sf0.1 at 14 code bytes per
 # vector = 18x compression vs float32 (the default 4x8 arm is 171x
 # compressed but 0.078/0.050 — the frontier now charts both ends of
@@ -2597,8 +2596,9 @@ def ann_recall_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds) reaches recall@5 0.616 (sf0.01) / 0.503 (sf0.1) at 18×
     compression — the r9 prescription's ≥0.5 bar, with the granularity
     axis (m) as the lever since rotation is a no-op on near-isotropic
-    fixtures. tools/ann_frontier_sweep.py and tools/pq_tune_probe.py
-    sweep the knobs behind these registered points.
+    fixtures. tools/ann_frontier_sweep.py sweeps the knobs behind these
+    registered points; the tuned arm's sweep is recorded at
+    ``_PQ_TUNED_M``.
 
     Scale shape: candidate counts are aggregates over the SAME shared
     subtrees the searches use (bucket join, coarse-cell join) — no new

@@ -188,7 +188,7 @@ def quantiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     path (``agg_quantiles``): fixed memory, mergeable partials."""
     from ._percentile import domain_percentiles
 
-    # NOT fanned out (r14 A/B, tools/pctl_ab.py: 1.27s plain vs 1.79s
+    # NOT fanned out (r14 A/B, interleaved min-of-3: 1.27s plain vs 1.79s
     # fanned): the (g, v) byval pre-aggregate combines map-side only
     # when a partition covers the value domain; round-robin multiplies
     # the partial states and shuffles more — the agg_weighted_median
@@ -424,7 +424,7 @@ def ts_user_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fan-out spread across the session's shuffle width; the join
     # is then co-partitioned (same key, same count) and the pair
     # aggregate's map-side partials run where the explosion happens.
-    # r14 probe (tools/ts_salt_probe.py, VERDICT r13 #7): a (day,
+    # r14 probe (interleaved min-of-3, VERDICT r13 #7): a (day,
     # user-bucket) salt (bucket left, replicate right x8) measured
     # 1.31s vs 1.12s for this day pin — NEGATIVE. The cohort screen
     # already caps any day's join output at cohort^2 (= 40k rows), so

@@ -433,8 +433,7 @@ class StreamingMaterializer:
             keep_deletes=True,  # tombstones persist in state
         )
         storeio.swap_in(
-            merged, self.state_path, keep_stamp=True,
-            folded=[os.path.basename(r) for r in runs],
+            merged, self.state_path, folded=[os.path.basename(r) for r in runs]
         )
         storeio.sweep_runs(self.state_path)
         self._base_schema = None  # the new base may carry a new schema

@@ -547,14 +547,27 @@ def test_coverage_md_header_count_matches_registry():
 
 
 # -- BNLJ lint (VERDICT r11 #6) ---------------------------------------------
-# EXPLAIN.md's BroadcastNestedLoopJoins are all 1-row bounds / scalar
-# broadcasts today, but nothing stopped the next operator from
+# Every BroadcastNestedLoopJoin in the audited plans is a 1-row bound or
+# a scalar broadcast today, but nothing stops the next operator from
 # introducing an unbounded one — the all-pairs blowup the zero-
-# CartesianProduct checks above exist to prevent. This lint walks the
-# same audited plan set as tools/dump_plans.py and fails on any BNLJ
+# CartesianProduct checks above exist to prevent. This lint re-derives
+# the plans of the headline set plus EXTRA and fails on any BNLJ
 # whose broadcast build side isn't provably bounded: a scalar aggregate
 # (empty grouping -> exactly 1 row), an explicit limit, or
 # driver-literal data.
+
+# non-headline queries whose plan shape is audited alongside bench.HEADLINE
+EXTRA = [
+    "bfs_distances",
+    "triangle_count",
+    "sim_sparse_tfidf",
+    "join_asof_forward",
+    "join_asof_nearest",
+    "k_anonymity_audit",
+    "dedup_minhash_quality",
+    "dedup_embedding_quality",
+    "dedup_simhash_quality",
+]
 
 _BOUNDED_LIMITS = {
     "CollectLimit",
@@ -606,7 +619,6 @@ def _build_side_bounded(node) -> bool:
 
 def test_bnlj_build_sides_are_bounded(spark, sf_dir):
     import bench
-    from tools.dump_plans import EXTRA
 
     names = list(dict.fromkeys(bench.HEADLINE + EXTRA))
     offenders = []

@@ -9,6 +9,7 @@ bodies."""
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 PKG = "go_cdc_spark"
@@ -234,3 +235,48 @@ def test_tool_imports_resolve():
                     if a.name not in bound and _module_file(f"{mod}.{a.name}") is None:
                         broken.append(f"{tool.name}: {mod}.{a.name}")
     assert broken == [], f"tool imports that no longer resolve: {broken}"
+
+
+# Code and the docs that describe the repo as it stands; the history
+# logs (CHANGES.md, SCALE.md, VERDICT.md, OPTIMIZATION_r*.md,
+# ROADMAP.md) record what existed at the time and are not checked.
+LIVE_REFERENCES = [
+    "go_cdc_spark",
+    "tests",
+    "tools",
+    "bench.py",
+    "README.md",
+    "COVERAGE.md",
+    ".claude/skills/verify/SKILL.md",
+]
+_TOOL_PATH = re.compile(r"tools/(\w+)\.py")
+# the plan dumps, deleted once tests/test_plans.py re-derived the plans
+_DELETED_ARTIFACT = re.compile(r"EXPLAIN\.md|plans/r[1-9]")
+
+
+def _live_reference_files() -> list[Path]:
+    files: list[Path] = []
+    for name in LIVE_REFERENCES:
+        path = ROOT / name
+        if path.is_dir():
+            files += sorted(
+                p for p in path.rglob("*") if p.suffix in (".py", ".md")
+            )
+        elif path.is_file():
+            files.append(path)
+    return files
+
+
+def test_live_references_name_existing_files():
+    """A ``tools/<name>.py`` path in code or a live doc names a tool that
+    exists, and nothing points at the deleted plan dumps."""
+    dangling = []
+    for path in _live_reference_files():
+        rel = path.relative_to(ROOT).as_posix()
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            for m in _TOOL_PATH.finditer(line):
+                if not (ROOT / "tools" / f"{m.group(1)}.py").is_file():
+                    dangling.append(f"{rel}:{i}: {m.group(0)}")
+            for m in _DELETED_ARTIFACT.finditer(line):
+                dangling.append(f"{rel}:{i}: {m.group(0)}")
+    assert dangling == [], f"references to files that do not exist: {dangling}"

@@ -14,7 +14,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 
 out_path = None
@@ -51,7 +52,7 @@ print("SMOKE rows:", len(rows), "schema:", df.columns)
 assert len(rows) > 0
 
 # t2: every oracle query at sf0.01, duckdb side-by-side
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(REPO, "tests"))
 from oracle_harness import compare
 qs, osql = e.queries(), e.oracle_sql()
 print("queries:", len(qs), "with oracle:", len(osql))
