@@ -4,7 +4,8 @@ it must be referenced by package code — a module or function that only
 tests reach is a second implementation nobody runs. No Spark: both
 checks parse source with ``ast``; the walk follows every ``import`` /
 ``from … import`` it finds, including the lazy ones inside function
-bodies."""
+bodies. Tool imports must resolve, and a tool path named in code or a
+live doc must name a file that exists."""
 
 from __future__ import annotations
 
